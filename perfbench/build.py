@@ -67,8 +67,9 @@ def build():
     with open(argfile, "w") as f:
         f.write("\n".join(srcs))
     r = subprocess.run(
-        ["java", "-Xss8m", "-Xmx2g", "-cp", ":".join(comp), "scala.tools.nsc.Main",
-         "-nowarn", "-d", classes, "-cp", os.path.join(jars, "*"), "@" + argfile],
+        ["java", "-Xss8m", "-Xmx2g", "-XX:-UsePerfData", "-cp", ":".join(comp),
+         "scala.tools.nsc.Main", "-nowarn", "-d", classes,
+         "-cp", os.path.join(jars, "*"), "@" + argfile],
         stdout=sys.stderr, stderr=sys.stderr)
     if r.returncode != 0:
         raise SystemExit("perfbench: compilation failed")

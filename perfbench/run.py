@@ -52,7 +52,8 @@ def java_cmd(classes, extra):
     props = {"java.io.tmpdir": tmp, "spark.local.dir": tmp,
              "spark.sql.warehouse.dir": os.path.join(tmp, "warehouse"),
              "spark.ui.enabled": "false", "spark.sql.session.timeZone": "UTC"}
-    return (["java", "-Xmx3g", "-Xss8m"] + opens +
+    # -XX:-UsePerfData: no hsperfdata file in the system temp directory
+    return (["java", "-Xmx3g", "-Xss8m", "-XX:-UsePerfData"] + opens +
             [f"-D{k}={v}" for k, v in props.items()] +
             ["-cp", f"{os.path.join(build.spark_jars(), '*')}:{classes}", "perfbench.Main"] +
             extra)
