@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Benchmark of the telco streaming topology.
 
-    python3 perfbench/run.py --workload telco_read --seed 1 --seconds 16 --trace 0
+    python3 perfbench/run.py --workload telco_read --seed 1 --seconds 7 --trace 0
 
 Builds the program and the benchmark from source (perfbench/build.py),
 runs one workload in a fresh JVM, and prints as its last stdout line one

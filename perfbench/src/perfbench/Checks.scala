@@ -133,7 +133,7 @@ object Checks {
     val (hits, crc) = geofenceExpected(evs, fencesOf)
     expect("geofence expected", hits == 1L && crc == hitCrc("b1", "sq"))
     val stats = statsExpected(2, 15, 2)
-    val obs = BatchObs(0L, 0L, stats, stats, 0L, hits, crc, 0L)
+    val obs = BatchObs(0L, 0L, stats, stats, 0L, hits, crc, 0L, -1L)
     expect("batch accepted", batchMismatch(obs, stats, hits, crc).isEmpty)
     expect("corrupted stats rejected", batchMismatch(obs, stats + 1, hits, crc).size == 2)
     expect("corrupted hit count rejected", batchMismatch(obs, stats, hits + 1, crc).nonEmpty)

@@ -17,7 +17,7 @@ import graft.tools.ToolSession
 /** What the sink observed while writing one fan-out micro-batch. */
 final case class BatchObs(sinkStartNs: Long, sinkEndNs: Long, subN: Long,
                           cellN: Long, statsRows: Long, geoHits: Long,
-                          geoCrc: Long, anomRows: Long)
+                          geoCrc: Long, anomRows: Long, enrichedRows: Long)
 
 /** One closed-loop step: the attaches and celltower events sent together. */
 final case class Step(attaches: Array[String], events: Array[CtEvent])
@@ -34,6 +34,10 @@ final class Topology(val tag: Int, val traced: Boolean,
   var queries: Seq[StreamingQuery] = Nil
   var km: IncrementalKMeans = _
   val chunks = ArrayBuffer[Array[CtEvent]]()
+  /** While set, the sink samples live heap once per micro-batch. */
+  @volatile var sampleHeap = false
+  val heapMb = new java.util.concurrent.ConcurrentLinkedQueue[Double]
+  val heapNs = new java.util.concurrent.atomic.AtomicLong(0L)
   def send(s: Step): Unit = {
     if (s.attaches.nonEmpty) attachMem.addData(s.attaches.toSeq)
     chunks += s.events
@@ -100,16 +104,21 @@ final class TelcoRun(workload: String, p: Params, seed: Long, seconds: Double,
     clockMs += n
     Step(gen.attaches(math.round(n * p.attachShare).toInt, clockMs), evs)
   }
-  // the open loop measures for `seconds`; the closed loop, whose
-  // batches each take seconds, measures two after one warm-up batch
-  private val warmSteps = Seq.fill(1)(mkStep(p.batchEvents))
-  private val capSteps = Seq.fill(2)(mkStep(p.batchEvents))
+  // the closed loop measures batches, each of which takes seconds, after
+  // the set-up's warm-up batch, until `seconds` have passed and at least
+  // two are done; six are built, more than any run has needed
+  private val warmStep = mkStep(p.batchEvents)
+  private val capSteps = Seq.fill(6)(mkStep(p.batchEvents))
   // the single-core baseline is celltower traffic only (telco_read's shape)
   private val oneCoreSteps =
     if (trace) Seq.fill(3)(mkStep(p.batchEvents).copy(attaches = Array.empty)) else Nil
-  private val latWarm = mkStep(50).copy(attaches = Array.empty)
+  // the open loop's topology first runs one small drained micro-batch
+  // (a fresh query's first batch costs seconds more), then measures for
+  // `seconds` after an untimed 2 s lead-in in which the batch size settles
+  private val latWarm = mkStep(50)
+  private val leadInEvents = math.round(p.rate * 2.0).toInt
   private val openEvents: Array[CtEvent] =
-    gen.traffic(math.round(p.rate * seconds).toInt, clockMs, 1000.0 / p.rate)
+    gen.traffic(leadInEvents + math.round(p.rate * seconds).toInt, clockMs, 1000.0 / p.rate)
   private val openAttaches: Array[String] =
     gen.attaches(math.round(openEvents.length * p.attachShare).toInt, clockMs)
   private val preloadPayloads = gen.preloadAttaches
@@ -145,9 +154,25 @@ final class TelcoRun(workload: String, p: Params, seed: Long, seconds: Double,
       coalesce(sum(crc32(concat(col("id"), lit("|"), col("fence_name")).cast("binary"))),
         lit(0L)).as("crc")))
     val an = spanIf(t, "sink.anomalies", tg)(writeObserved(out.anomalies, count(lit(1)).as("rows")))
+    val e = now
+    // traced runs also count the persisted enrichment prefix, which
+    // processBatch lists first among the frames it caches
+    val enriched = if (!t.traced) -1L
+      else span("enrich.rows", tg)(out.cached.headOption.map(_.count()).getOrElse(-1L))
     def l(m: Map[String, Any], k: String): Long = m(k).asInstanceOf[Long]
-    t.obs.put(id, BatchObs(s, now, l(sub, "n"), l(cel, "n"),
-      l(sub, "rows") + l(cel, "rows"), l(geo, "rows"), l(geo, "crc"), l(an, "rows")))
+    t.obs.put(id, BatchObs(s, e, l(sub, "n"), l(cel, "n"),
+      l(sub, "rows") + l(cel, "rows"), l(geo, "rows"), l(geo, "crc"), l(an, "rows"), enriched))
+    // the batch's persisted frames are released only after the sink
+    // returns, so this sample holds them and the model. It waits for the
+    // step's attach batch first: running tasks hold execution memory, and
+    // a sample that overlaps them reads that instead. The closed loop's
+    // step ends when both queries are done, so the wait costs no time.
+    if (t.sampleHeap) spanIf(t, "bench.heap_sample", tg) {
+      t.queries.head.processAllAvailable()
+      val h = now
+      t.heapMb.add(liveHeapMb())
+      t.heapNs.addAndGet(now - h)
+    }
   }
 
   private def newTopology(traced: Boolean): Topology = {
@@ -164,16 +189,17 @@ final class TelcoRun(workload: String, p: Params, seed: Long, seconds: Double,
     (Model.decodeJson(t.attachMem.toDF(), Model.attachSchema),
       Model.decodeJson(t.ctMem.toDF(), Model.celltowerSchema))
 
-  /** The program's own wiring, exactly as a deployment starts it. */
-  private def startTopology(cfg: PipelineConfig): Topology = {
-    val t = newTopology(traced = false)
+  /** The program's own wiring, exactly as a deployment starts it; a
+    * traced topology differs only in its sink's spans.
+    */
+  private def startTopology(cfg: PipelineConfig, traced: Boolean = false): Topology = {
+    val t = newTopology(traced)
     val (attach, ct) = streams(t)
     val (qs, km) = TelcoPipelines.start(cfg, attach, ct, sink(t) _)
     t.queries = qs; t.km = km
     t
   }
 
-  private val bucketsRewritten = ArrayBuffer[Double]()
   private def manifest(path: String): Map[String, String] = {
     val f = Paths.get(path, "manifest.json")
     if (!Files.exists(f)) Map.empty
@@ -181,69 +207,50 @@ final class TelcoRun(workload: String, p: Params, seed: Long, seconds: Double,
       .findAllMatchIn(new String(Files.readAllBytes(f), "UTF-8"))
       .map(m => m.group(1) -> m.group(2)).toMap
   }
-
-  /** Traced mode: the same wiring as `TelcoPipelines.start(config, …)`,
-    * spelled out here so each call into a layer runs inside a span.
+  /** Σ of the live bucket versions; each upsert that rewrites a bucket
+    * adds one.
     */
-  private def startTraced(cfg: PipelineConfig): Topology = {
-    val tr = tracer.get
-    val t = newTopology(traced = true)
-    val (attach, ct) = streams(t)
-    val store = new KeyedUpsertStore(spark, cfg.storePath, "bearerId", "ts")
-    val km = cfg.newKMeans()
-    val aq = attach.writeStream.outputMode("append").trigger(cfg.trigger)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        val before = manifest(cfg.storePath)
-        tr.span("store.upsert", t.batchTag(id))(store.upsert(b))
-        val after = manifest(cfg.storePath)
-        synchronized { bucketsRewritten += after.count { case (k, v) => !before.get(k).contains(v) } }
-        ()
-      }.start()
-    val fq = ct.writeStream.outputMode("append").trigger(cfg.trigger)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        tr.span("fanout.foreach_batch", t.batchTag(id)) {
-          val cur = tr.span("store.current", t.batchTag(id))(store.current)
-          val out = tr.span("pipeline.process_batch", t.batchTag(id)) {
-            TelcoPipelines.processBatch(b, cur, km, cfg.kmeansDimensions,
-              train = id > km.lastAppliedBatch, windowSize = cfg.metricsWindow,
-              slide = cfg.metricsSlide, watermark = cfg.watermark,
-              fenceFile = cfg.geofenceFile)
-          }
-          try sink(t)(out, id)
-          finally tr.span("pipeline.release", t.batchTag(id))(out.release())
-          km.lastAppliedBatch = id
-        }
-      }.start()
-    t.queries = Seq(aq, fq); t.km = km
-    t
-  }
+  private def versionSum(path: String): Long =
+    manifest(path).values.map(d => d.drop(d.indexOf("_v") + 2).toLong).sum
 
   // ---- phases -----------------------------------------------------------
-  private val heapPeakMb = ArrayBuffer[Double]()
+  /** Heap in use after a second full GC. Objects freed through reference
+    * processing (cleaners, Spark's ContextCleaner) outlive the first one;
+    * a single GC read ~18 MB more in about one sample of three.
+    */
   private def liveHeapMb(): Double = {
+    System.gc()
+    Thread.sleep(200)
     System.gc()
     ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
   }
 
   /** Closed loop: send one step, wait until both queries have processed
-    * it, repeat. Returns each step's wall seconds.
+    * it, repeat until at least `minSteps` are done and their walls add up
+    * to `budgetS`. Returns each step's wall seconds, less the sink's heap
+    * sample (taken once the step's attach batch is done, so nothing of the
+    * step ran meanwhile).
     */
-  private def closedLoop(t: Topology, steps: Seq[Step],
-                         after: () => Unit = () => ()): Seq[Double] =
-    steps.map { st =>
+  private def closedLoop(t: Topology, steps: Seq[Step], minSteps: Int, budgetS: Double,
+                         after: () => Unit = () => ()): Seq[Double] = {
+    val walls = ArrayBuffer[Double]()
+    val it = steps.iterator
+    while (it.hasNext && (walls.size < minSteps || walls.sum < budgetS)) {
       val t0 = now
-      t.send(st); t.drain()
-      val wall = since(t0)
+      val g0 = t.heapNs.get
+      t.send(it.next()); t.drain()
+      walls += since(t0) - (t.heapNs.get - g0) / 1e9
       after()
-      wall
     }
+    walls.toSeq
+  }
 
   final case class OpenLoop(startNs: Long, firstChunk: Int,
                             sends: Seq[(Int, Int, Long)], lateMaxS: Double)
 
   /** Open loop: events are due at a fixed rate from `startNs`; every
     * 50 ms tick sends everything due so far, however far behind the
-    * program is.
+    * program is. The first `leadInEvents` are the untimed lead-in.
     */
   private def openLoop(t: Topology): OpenLoop = {
     val tickNs = 50000000L
@@ -285,17 +292,19 @@ final class TelcoRun(workload: String, p: Params, seed: Long, seconds: Double,
     val lat = ArrayBuffer[Double]()
     ol.sends.zipWithIndex.foreach { case ((a, b, _), ci) =>
       val end = endOf(ol.firstChunk + ci)
-      (a until b).foreach(j => lat += (end - schedNs(j)) / 1e9)
+      (math.max(a, leadInEvents) until b).foreach(j => lat += (end - schedNs(j)) / 1e9)
     }
-    // backlog at each batch end: events sent by then minus events done
+    // backlog at each batch end in the timed window: events sent by then
+    // minus events done
     val ends = t.batches.flatMap { case (id, r) => Option(t.obs.get(id)).map(o =>
       (o.sinkEndNs, r.filter(_ >= ol.firstChunk).map(c => t.chunks(c).length).sum)) }
       .sortBy(_._1)
     var done = 0L
+    val timedFrom = schedNs(leadInEvents)
     val backlog = ends.map { case (end, n) =>
       done += n
-      ol.sends.filter(_._3 <= end).map(s => (s._2 - s._1).toLong).sum - done
-    }
+      end -> (ol.sends.filter(_._3 <= end).map(s => (s._2 - s._1).toLong).sum - done)
+    }.collect { case (end, b) if end >= timedFrom => b }
     val third = backlog.size / 3
     val growing = third >= 1 &&
       backlog.takeRight(third).min > 2 * math.max(backlog.take(third).max, (p.rate * 2).toLong)
@@ -308,13 +317,12 @@ final class TelcoRun(workload: String, p: Params, seed: Long, seconds: Double,
   }
 
   // ---- checks -------------------------------------------------------------
-  final case class CheckResult(attempted: Int, failed: Int, errors: Seq[String],
-                               matched: Long, carried: Long, hits: Long, pairs: Long)
+  final case class CheckResult(attempted: Int, failed: Int, errors: Seq[String])
 
   private def check(t: Topology): CheckResult = {
     val errs = ArrayBuffer[String]()
     var failed = 0
-    var matchedAll = 0L; var carried = 0L; var hits = 0L
+    var carried = 0L
     val replay = new Checks.KMeansReplay(baseCfg.kmeansK, baseCfg.kmeansDimensions.size,
       baseCfg.kmeansDecay, baseCfg.kmeansSeed)
     val bs = t.batches
@@ -328,12 +336,13 @@ final class TelcoRun(workload: String, p: Params, seed: Long, seconds: Double,
       Option(t.obs.get(id)) match {
         case None => failed += 1; errs += s"batch $id: sink never ran"
         case Some(o) =>
-          val bad = Checks.batchMismatch(o, stats, gHits, gCrc)
+          val bad = Checks.batchMismatch(o, stats, gHits, gCrc) ++
+            (if (o.enrichedRows >= 0 && o.enrichedRows != matched.size)
+              Seq(s"enrichment kept ${o.enrichedRows} rows, ${matched.size} can match") else Nil)
           if (bad.nonEmpty) { failed += 1; errs ++= bad.map(m => s"batch $id: $m") }
-          hits += o.geoHits
       }
       replay.update(matched.map(e => Array(e.rtt, e.loss)))
-      matchedAll += matched.size; carried += evs.size
+      carried += evs.size
     }
     val sent = t.chunks.map(_.length).sum
     if (carried != sent) { errs += s"$sent events sent, $carried carried by micro-batches"; failed += 1 }
@@ -341,8 +350,7 @@ final class TelcoRun(workload: String, p: Params, seed: Long, seconds: Double,
     Checks.kmeansMismatch(t.km.currentCenters, t.km.currentCounts, replay).foreach { m =>
       errs += m; failed += 1
     }
-    CheckResult(bs.size, math.min(failed, math.max(bs.size, 1)), errs.toSeq,
-      matchedAll, carried, hits, matchedAll * fences.size)
+    CheckResult(bs.size, math.min(failed, math.max(bs.size, 1)), errs.toSeq)
   }
 
   /** `Model.decodeJson` must drop exactly the malformed records. */
@@ -381,33 +389,34 @@ final class TelcoRun(workload: String, p: Params, seed: Long, seconds: Double,
     val tPreload = now
     span("store.preload")(preload(baseCfg.storePath))
     val preloadS = since(tPreload)
+    val preloadVersions = versionSum(baseCfg.storePath)
     val tWarm = now
-    val cap = if (trace) startTraced(capCfg) else startTopology(capCfg)
-    warmSteps.foreach { s => cap.send(s); cap.drain() }
+    val cap = startTopology(capCfg, trace)
+    cap.send(warmStep); cap.drain()
     val warmS = since(tWarm)
     val setupS = sessionS + preloadS + warmS
     log(f"setup: session $sessionS%.2fs, preload $preloadS%.2fs, warm-up $warmS%.2fs")
 
-    // capacity, closed loop; traced mode also times the fence file's
-    // hot reload between steps
+    // capacity, closed loop, batches back to back; traced mode also times
+    // the fence file's hot reload between steps
     val fenceLoad = ArrayBuffer[Double]()
-    val capWalls = closedLoop(cap, capSteps, after = () => if (trace)
+    cap.sampleHeap = true
+    val capWalls = closedLoop(cap, capSteps, minSteps = 2, budgetS = seconds, after = () => if (trace)
       baseCfg.geofenceFile.foreach { f =>
         val t0 = now
         span("geofence.fence_load")(GeofenceOp.fencesFromJson(spark, f).count())
         fenceLoad += since(t0)
       })
-    heapPeakMb += liveHeapMb()
     cap.stop()
     val eventsPerS = p.batchEvents / median(capWalls)
     log(f"capacity: ${capWalls.map(w => f"$w%.2f").mkString(" ")} s/step -> $eventsPerS%.0f events/s")
 
-    // latency, open loop at the workload's fixed offered rate
-    val lt = if (trace) startTraced(baseCfg) else startTopology(baseCfg)
+    // latency, open loop at the workload's fixed offered rate, on a
+    // fresh topology with the reference 1000 ms clock
+    val lt = startTopology(baseCfg, trace)
     lt.send(latWarm); lt.drain()
     val ol = openLoop(lt)
     lt.stop()
-    heapPeakMb += liveHeapMb()
     val lat = latency(lt, ol)
     log(f"latency: p50 ${lat.p50}%.3fs p99 ${lat.p99}%.3fs over ${lat.samples} events at ${p.rate}%.0f/s, " +
       f"backlog max ${lat.backlogMax}, generator late max ${ol.lateMaxS}%.3fs")
@@ -431,8 +440,8 @@ final class TelcoRun(workload: String, p: Params, seed: Long, seconds: Double,
         ("latency_p50_s", lat.p50, "s"),
         ("latency_p99_s", lat.p99, "s"),
         ("setup_s", setupS, "s"),
-        ("peak_heap_mb", heapPeakMb.max, "MB"))
-      else perLayer(sessionS, eventsPerS, capWalls, fenceLoad.toSeq, lat, ol, checks, dropped)
+        ("peak_heap_mb", cap.heapMb.asScala.max, "MB"))
+      else perLayer(sessionS, eventsPerS, capWalls, fenceLoad.toSeq, lat, ol, dropped, preloadVersions)
     spark.stop()
     deleteRecursive(work)
     log("done")
@@ -444,31 +453,58 @@ final class TelcoRun(workload: String, p: Params, seed: Long, seconds: Double,
     if (v.isNaN || v.isInfinite) "0" else java.math.BigDecimal.valueOf(v).toPlainString
 
   // ---- traced-mode attribution ------------------------------------------------
+  /** Rebuilds each micro-batch from its query progress as a root span:
+    * the streaming engine's own source and planning time, then the
+    * `foreachBatch` body (`addBatch`). An attach body is `store.upsert`
+    * whole. A fan-out body is `store.current` + `processBatch` up to the
+    * sink's first span, the sink's live spans, then `out.release()` and
+    * the post-batch hook. Spark work outside any span is charged by the
+    * micro-batch that ran it. Progress times are whole milliseconds.
+    */
+  private def progressSpans(tr: Tracer, t: Topology): Unit = {
+    val offsetNs = System.nanoTime() - System.currentTimeMillis() * 1000000L
+    val live = tr.all.filter(s => s.parent == 0 && s.batch >= 0).groupBy(_.batch)
+    for ((q, qi) <- t.queries.zipWithIndex; pr <- q.recentProgress if pr.numInputRows > 0) {
+      val d = pr.durationMs.asScala.map { case (k, v) => k -> v.longValue * 1000000L }
+      def dur(k: String): Long = d.getOrElse(k, 0L)
+      val start = java.time.Instant.parse(pr.timestamp).toEpochMilli * 1000000L + offsetNs
+      val end = start + dur("triggerExecution")
+      val tg = t.batchTag(pr.batchId)
+      val work = tr.batchCounters.get((q.id.toString, pr.batchId))
+      val root = tr.record(if (qi == 0) "attach_query.batch" else "fanout_query.batch", 0, start, end, tg)
+      tr.record("source.offsets", root, start,
+        start + Seq("latestOffset", "getBatch", "walCommit", "commitOffsets").map(dur).sum, tg)
+      tr.record("stream.planning", root, start, start + dur("queryPlanning"), tg)
+      // the body ends where the offset commit starts
+      val bodyEnd = end - dur("commitOffsets")
+      val bodyStart = bodyEnd - dur("addBatch")
+      if (qi == 0) tr.record("store.upsert", root, bodyStart, bodyEnd, tg, work)
+      else {
+        val sinkSpans = live.getOrElse(tg, Nil)
+        sinkSpans.foreach(s => tr.reparent(s.id, root))
+        val first = (sinkSpans.map(_.startNs) :+ bodyEnd).min
+        val last = (sinkSpans.map(_.endNs) :+ bodyStart).max
+        tr.record("pipeline.process_batch", root, bodyStart, math.max(bodyStart, first), tg, work)
+        tr.record("pipeline.release", root, math.min(last, bodyEnd), bodyEnd, tg)
+      }
+    }
+  }
+
   private def perLayer(sessionS: Double, eventsPerS: Double, capWalls: Seq[Double],
                        fenceLoad: Seq[Double], lat: Latency, ol: OpenLoop,
-                       checks: Seq[CheckResult], dropped: Long): Seq[(String, Double, String)] = {
+                       dropped: Long, preloadVersions: Long): Seq[(String, Double, String)] = {
     val tr = tracer.get
     val tracedTops = topologies.filter(_.traced).toSeq
     org.apache.spark.perfbench.Bus.drain(spark.sparkContext)
-    // micro-batch roots from query progress, with the streaming engine's
-    // own source/planning work as children
-    val offsetNs = System.nanoTime() - System.currentTimeMillis() * 1000000L
-    val rootNames = Map(0 -> "attach_query.batch", 1 -> "fanout_query.batch")
-    val bodyNames = Map(0 -> "store.upsert", 1 -> "fanout.foreach_batch")
-    for (t <- tracedTops; qi <- 0 to 1; pr <- t.queries(qi).recentProgress
-         if pr.numInputRows > 0) {
-      val d = pr.durationMs.asScala.map { case (k, v) => k -> v.longValue }
-      val start = java.time.Instant.parse(pr.timestamp).toEpochMilli * 1000000L + offsetNs
-      val trig = d.getOrElse("triggerExecution", 0L) * 1000000L
-      val tg = t.batchTag(pr.batchId)
-      val root = tr.record(rootNames(qi), 0, start, start + trig, tg)
-      val src = Seq("latestOffset", "getBatch", "walCommit", "commitOffsets")
-        .map(d.getOrElse(_, 0L)).sum * 1000000L
-      tr.record("source.offsets", root, start, start + src, tg)
-      tr.record("stream.planning", root, start, start + d.getOrElse("queryPlanning", 0L) * 1000000L, tg)
-      tr.all.filter(s => s.name == bodyNames(qi) && s.batch == tg && s.parent == 0)
-        .foreach(s => tr.reparent(s.id, root))
-    }
+    tracedTops.foreach(progressSpans(tr, _))
+    // store.current resolves the manifest and lists the bucket files;
+    // timed here, on the final store, since its call sits inside the
+    // program's fan-out body
+    val currentS = median((1 to 5).map { _ =>
+      val t0 = now
+      span("store.current")(new KeyedUpsertStore(spark, baseCfg.storePath, "bearerId", "ts").current)
+      since(t0)
+    })
     val all = tr.all
     val self = tr.selfNs(all)
     def named(n: String) = all.filter(_.name == n)
@@ -481,13 +517,13 @@ final class TelcoRun(workload: String, p: Params, seed: Long, seconds: Double,
     val fanWall = fanRoots.map(s => s.endNs - s.startNs).sum.toDouble
     val unattributed = if (fanWall <= 0) 1.0 else fanRoots.map(s => self(s.id)).sum / fanWall
     val obs = tracedTops.flatMap(_.obs.asScala.values)
-    val chk = topologies.toSeq.zip(checks).collect { case (t, c) if t.traced => c }
-    val matched = chk.map(_.matched).sum.toDouble
-    val carried = chk.map(_.carried).sum.toDouble
-    val pairs = chk.map(_.pairs).sum.toDouble
-    val hits = chk.map(_.hits).sum.toDouble
+    val rowsIn = tracedTops.flatMap(_.queries(1).recentProgress.map(_.numInputRows)).sum.toDouble
+    val enriched = obs.map(_.enrichedRows.toDouble).sum
+    val pairs = enriched * fences.size
+    val hits = obs.map(_.geoHits.toDouble).sum
     val upserts = named("store.upsert")
     val storeNow = KeyedStoreStats(baseCfg.storePath)
+    val rewritten = (versionSum(baseCfg.storePath) - preloadVersions).toDouble
     val oneCore = oneCoreCapacity()
     val statsSpans = counters("sink.subscriber_stats") ++ counters("sink.celltower_stats")
     val activeS = (capWalls.sum + ol.sends.lastOption.map(s => (s._3 - ol.startNs) / 1e9).getOrElse(0.0))
@@ -498,23 +534,23 @@ final class TelcoRun(workload: String, p: Params, seed: Long, seconds: Double,
       ("session.build_s", sessionS, "s"),
       ("store.upsert_s", meanS("store.upsert"), "s"),
       ("store.upsert_jobs", mean(upserts.map(s => tr.subtree(all, s.id).jobs.toDouble)), "count"),
-      ("store.buckets_rewritten", mean(bucketsRewritten), "count"),
+      ("store.buckets_rewritten", if (upserts.isEmpty) 0.0 else rewritten / upserts.size, "count"),
       ("store.bytes_written", mean(upserts.map(s => tr.subtree(all, s.id).bytesWritten.toDouble)), "bytes"),
-      ("store.current_s", meanS("store.current"), "s"),
+      ("store.current_s", currentS, "s"),
       ("store.rows", storeNow._1.toDouble, "count"),
       ("store.mb", storeNow._2, "MB"),
       ("pipeline.process_batch_s", meanS("pipeline.process_batch"), "s"),
       ("pipeline.jobs_per_batch", mean(counters("pipeline.process_batch").map(_.jobs.toDouble)), "count"),
       ("pipeline.tasks_per_batch", mean(counters("pipeline.process_batch").map(_.tasks.toDouble)), "count"),
       ("pipeline.release_s", meanS("pipeline.release"), "s"),
-      ("enrich.match_ratio", if (carried > 0) matched / carried else 0.0, "ratio"),
+      ("enrich.match_ratio", if (rowsIn > 0) enriched / rowsIn else 0.0, "ratio"),
       ("sink.subscriber_stats_s", meanS("sink.subscriber_stats"), "s"),
       ("sink.celltower_stats_s", meanS("sink.celltower_stats"), "s"),
       ("stats.rows_out", mean(obs.map(_.statsRows.toDouble)), "count"),
       ("stats.shuffle_bytes", statsSpans.map(_.shuffleWrite.toDouble).sum / nb, "bytes"),
       ("sink.geofence_s", meanS("sink.geofence"), "s"),
       ("geofence.fence_load_s", mean(fenceLoad), "s"),
-      ("geofence.pairs_tested", pairs / nb, "count"),
+      ("geofence.pairs_nominal", pairs / nb, "count"),
       ("geofence.hit_ratio", if (pairs > 0) hits / pairs else 0.0, "ratio"),
       ("sink.anomalies_s", meanS("sink.anomalies"), "s"),
       ("anomalies.rows_out", mean(obs.map(_.anomRows.toDouble)), "count"),
@@ -550,7 +586,7 @@ final class TelcoRun(workload: String, p: Params, seed: Long, seconds: Double,
     spark = ToolSession.build("1")
     val t = startTopology(capCfg)
     t.send(oneCoreSteps.head); t.drain()
-    val walls = closedLoop(t, oneCoreSteps.tail)
+    val walls = closedLoop(t, oneCoreSteps.tail, minSteps = oneCoreSteps.size - 1, budgetS = 0)
     t.stop()
     topologies -= t
     p.batchEvents / median(walls)

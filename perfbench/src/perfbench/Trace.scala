@@ -34,13 +34,17 @@ final class SparkCounters {
 /** In-memory span recorder. A span marks the Spark jobs its thread
   * submits with a local property, and the listener below charges their
   * tasks to it, so Spark runtime counters land on the layer that caused
-  * them. Spans are written out only when the run ends.
+  * them. Jobs a streaming query runs outside any span are kept by
+  * micro-batch (the query id and batch id the streaming engine sets as
+  * local properties) for spans rebuilt from query progress. Spans are
+  * written out only when the run ends.
   */
 final class Tracer(sc: SparkContext) {
   private val ids = new AtomicInteger(0)
   val spans = new ConcurrentLinkedQueue[Span]
   private val current = new ThreadLocal[Integer] { override def initialValue(): Integer = 0 }
   val counters = TrieMap[Int, SparkCounters]()
+  val batchCounters = TrieMap[(String, Long), SparkCounters]()
 
   def span[T](name: String, batch: Long = -1L)(body: => T): T = {
     val id = ids.incrementAndGet()
@@ -57,11 +61,14 @@ final class Tracer(sc: SparkContext) {
     }
   }
 
-  /** A span reconstructed after the fact (e.g. from query progress). */
+  /** A span reconstructed after the fact (e.g. from query progress),
+    * charged with `work`.
+    */
   def record(name: String, parent: Int, startNs: Long, endNs: Long,
-             batch: Long = -1L): Int = {
+             batch: Long = -1L, work: Option[SparkCounters] = None): Int = {
     val id = ids.incrementAndGet()
     spans.add(Span(id, parent, name, startNs, endNs, batch))
+    work.foreach(counters.update(id, _))
     id
   }
 
@@ -71,16 +78,21 @@ final class Tracer(sc: SparkContext) {
     }
 
   val listener: SparkListener = new SparkListener {
-    private val stageSpan = TrieMap[Int, Int]()
+    private val stageTarget = TrieMap[Int, SparkCounters]()
+    private def target(p: java.util.Properties): Option[SparkCounters] =
+      Option(p.getProperty(Tracer.Key))
+        .map(sid => counters.getOrElseUpdate(sid.toInt, new SparkCounters))
+        .orElse(for {
+          q <- Option(p.getProperty(Tracer.QueryIdKey))
+          b <- Option(p.getProperty(Tracer.BatchIdKey))
+        } yield batchCounters.getOrElseUpdate((q, b.toLong), new SparkCounters))
     override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).flatMap(p => Option(p.getProperty(Tracer.Key)))
-        .map(_.toInt).foreach { sid =>
-          counters.getOrElseUpdate(sid, new SparkCounters).jobs += 1
-          e.stageIds.foreach(st => stageSpan(st) = sid)
-        }
+      Option(e.properties).flatMap(target).foreach { c =>
+        c.jobs += 1
+        e.stageIds.foreach(st => stageTarget(st) = c)
+      }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-      for (sid <- stageSpan.get(e.stageId); m <- Option(e.taskMetrics)) {
-        val c = counters.getOrElseUpdate(sid, new SparkCounters)
+      for (c <- stageTarget.get(e.stageId); m <- Option(e.taskMetrics)) {
         c.tasks += 1
         c.runNs += m.executorRunTime * 1000000L
         c.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
@@ -131,4 +143,7 @@ final class Tracer(sc: SparkContext) {
 
 object Tracer {
   val Key = "perfbench.span"
+  // set by Spark's streaming engine on the thread that runs a micro-batch
+  val QueryIdKey = "sql.streaming.queryId"
+  val BatchIdKey = "streaming.sql.batchId"
 }
