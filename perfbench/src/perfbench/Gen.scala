@@ -15,7 +15,8 @@ final case class Params(
     newBearerShare: Double,  // share of attaches that open a new bearer
     fencePolygons: Int,      // 0 = the reference's 5 fences
     batchEvents: Int,        // closed-loop micro-batch size
-    rate: Double)            // open-loop offered rate, events/s
+    rate: Double,            // open-loop offered rate, events/s
+    leadInS: Double)         // untimed open-loop seconds before latency is timed
 
 object Params {
   def load(path: String, workload: String): Params = {
@@ -35,7 +36,7 @@ object Params {
     Params(d("bearers").toInt, d("subscribers").toInt, d("cells").toInt,
       d("zipf_s"), d("unknown_share"), d("late_share"), d("malformed_share"),
       d("attach_share"), d("new_bearer_share"), d("fence_polygons").toInt,
-      d("batch_events").toInt, d("rate_events_per_s"))
+      d("batch_events").toInt, d("rate_events_per_s"), d("lead_in_s"))
   }
 }
 

@@ -112,13 +112,16 @@ final class TelcoRun(workload: String, p: Params, seed: Long, seconds: Double,
   // the single-core baseline is celltower traffic only (telco_read's shape)
   private val oneCoreSteps =
     if (trace) Seq.fill(3)(mkStep(p.batchEvents).copy(attaches = Array.empty)) else Nil
-  // the open loop's topology first runs one small drained micro-batch
-  // (a fresh query's first batch costs seconds more), then measures for
-  // `seconds` after an untimed 2 s lead-in in which the batch size settles
-  private val latWarm = mkStep(50)
-  private val leadInEvents = math.round(p.rate * 2.0).toInt
+  // the open loop measures for `seconds` after an untimed lead-in. It
+  // holds the fresh query's first micro-batch, which costs seconds more
+  // than the rest, and the open loop's own warm-up: its micro-batches keep
+  // getting faster for 10 s or more, even after the capacity phase
+  private val leadInEvents = math.round(p.rate * p.leadInS).toInt
+  // `seconds` of timed events, or more where the rate is too low for the
+  // 99th percentile to have ten events beyond it
+  private val timedEvents = math.max(math.round(p.rate * seconds).toInt, 1100)
   private val openEvents: Array[CtEvent] =
-    gen.traffic(leadInEvents + math.round(p.rate * seconds).toInt, clockMs, 1000.0 / p.rate)
+    gen.traffic(leadInEvents + timedEvents, clockMs, 1000.0 / p.rate)
   private val openAttaches: Array[String] =
     gen.attaches(math.round(openEvents.length * p.attachShare).toInt, clockMs)
   private val preloadPayloads = gen.preloadAttaches
@@ -414,7 +417,6 @@ final class TelcoRun(workload: String, p: Params, seed: Long, seconds: Double,
     // latency, open loop at the workload's fixed offered rate, on a
     // fresh topology with the reference 1000 ms clock
     val lt = startTopology(baseCfg, trace)
-    lt.send(latWarm); lt.drain()
     val ol = openLoop(lt)
     lt.stop()
     val lat = latency(lt, ol)
