@@ -56,7 +56,10 @@ object GeofenceOp {
         expr("transform(f.polygon, p -> p.lng)").as("lngs"))
   }
 
-  /** Geofence against an explicit fence frame (hot-reloaded or fixture). */
+  /** Geofence against an explicit fence frame (hot-reloaded or fixture).
+    * The predicate is the codegen'd [[PointInPolygonExpr]] (identical
+    * arithmetic to the UDF tier, asserted in GeoSpec).
+    */
   def geofenceWith(points: DataFrame, fencesFrame: DataFrame): DataFrame =
     points.crossJoin(broadcast(fencesFrame))
       .where(graft.functions.PointInPolygonExpr.column(
@@ -75,17 +78,10 @@ object GeofenceOp {
       (lit(3.32) + (((col("c_custkey") * lit(40503L)) % 1000L) / lit(1000.0)) * lit(2.38)).as("lng"))
 
   /** points(id, lat, lng) × fences → (id, fence_name) for contained
-    * points. The predicate is the codegen'd [[PointInPolygonExpr]]
-    * (identical arithmetic to the UDF tier, asserted in GeoSpec).
+    * points, against the built-in fixture fences.
     */
-  def geofence(points: DataFrame): DataFrame = {
-    val spark = points.sparkSession
-    points.crossJoin(broadcast(fencesDf(spark)))
-      .where(graft.functions.PointInPolygonExpr.column(
-        col("lat"), col("lng"), col("lats"), col("lngs")))
-      .select(col("id"), col("fence_name"))
-      .orderBy("id", "fence_name")
-  }
+  def geofence(points: DataFrame): DataFrame =
+    geofenceWith(points, fencesDf(points.sparkSession))
 
   /** Radius self-join with GRID-CELL blocking — "which point pairs are
     * within r of each other", the proximity join the broadcast-NL

@@ -109,11 +109,17 @@ class IncrementalKMeans(val k: Int, val dims: Int,
     */
   def predictCol(v: Column): Column = {
     val dcols = centers.map(c => round(l2sq(v, c), 6))
-    val minD = least(dcols: _*)
+    val minD = minOf(dcols)
     dcols.zipWithIndex.foldRight(lit(k - 1)) { case ((d, i), other) =>
       when(d === minD, lit(i)).otherwise(other)
     }
   }
+
+  /** Spark's `least` needs two or more arguments; with k = 1 the single
+    * distance column is its own minimum.
+    */
+  private def minOf(dcols: Array[Column]): Column =
+    if (dcols.length == 1) dcols.head else least(dcols: _*)
 
   /** One mini-batch update. `vecCol` must be array<double> of length
     * `dims`. Runs a single distributed aggregate; mutates driver state.
@@ -157,8 +163,7 @@ class IncrementalKMeans(val k: Int, val dims: Int,
   /** Score a frame with the current model: prediction + distance. */
   def transform(df: DataFrame, vecCol: String): DataFrame = {
     val v = col(vecCol)
-    val dcols = centers.map(c => sqrt(l2sq(v, c)))
-    val minD = least(dcols: _*)
+    val minD = minOf(centers.map(c => sqrt(l2sq(v, c))))
     df.withColumn("prediction", predictCol(v)).withColumn("dist", minD)
   }
 }

@@ -34,6 +34,15 @@ final case class PipelineConfig(
     kmeansSeed: Long = 1L,
     geofenceFile: Option[String] = None) {
 
+  // out-of-range knobs fail at construction, naming the key, instead of
+  // on the first micro-batch
+  require(batchMillis >= 0, s"batchMillis: must be >= 0, got $batchMillis")
+  require(metricsSlideMillis > 0 && metricsSlideMillis <= metricsWindowMillis,
+    s"metricsSlideMillis: must be in (0, metricsWindowMillis = " +
+      s"$metricsWindowMillis], got $metricsSlideMillis")
+  require(kmeansDimensions.nonEmpty, "kmeansDimensions: must name at least one metric")
+  require(kmeansK >= 1, s"kmeansK: must be >= 1, got $kmeansK")
+
   def metricsWindow: String = s"$metricsWindowMillis milliseconds"
   def metricsSlide: String = s"$metricsSlideMillis milliseconds"
 
@@ -61,13 +70,8 @@ object PipelineConfig {
       case other => throw new IllegalArgumentException(
         s"pipeline config must be a JSON object, got ${other.getClass.getSimpleName}")
     }
-    val known = Set("batchMillis", "checkpoint", "storePath", "attachTopic",
-      "celltowerTopic", "subscriberStatsTopic", "celltowerStatsTopic",
-      "kmeansOutlierTopic", "geofenceTopic", "kafkaBootstrap",
-      "metricsWindowMillis", "metricsSlideMillis", "watermark",
-      "kmeansDimensions", "kmeansK", "kmeansDecay", "kmeansSeed",
-      "geofenceFile")
-    val unknown = fields.keySet -- known
+    val d = PipelineConfig()
+    val unknown = fields.keySet -- d.productElementNames
     if (unknown.nonEmpty) throw new IllegalArgumentException(
       s"unknown pipeline config keys: ${unknown.toSeq.sorted.mkString(", ")}")
 
@@ -103,7 +107,6 @@ object PipelineConfig {
       case None => dflt
     }
 
-    val d = PipelineConfig()
     PipelineConfig(
       batchMillis = num("batchMillis", d.batchMillis),
       checkpoint = optStr("checkpoint"),

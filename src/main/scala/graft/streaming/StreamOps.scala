@@ -75,13 +75,6 @@ object StreamOps {
   def enrich(celltowerEvents: DataFrame, attachLatest: DataFrame): DataFrame =
     celltowerEvents.join(attachLatest, Seq("bearerId"), "inner")
 
-  /** Use case 2: geofence stream — the batch operator applied per
-    * micro-batch; fences are tiny and broadcast. Accepts any frame with
-    * (id, lat, lng).
-    */
-  def geofence(points: DataFrame): DataFrame =
-    graft.operators.GeofenceOp.geofence(points)
-
   /** Streaming exact dedup — the ingest-time form of
     * [[graft.operators.DedupOp.exact]]: drop any record whose dedup key
     * (e.g. a content hash) was already seen. State is Spark-managed and

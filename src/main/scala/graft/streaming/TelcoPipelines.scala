@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.model.Model
 import graft.operators.{GeofenceOp, OutlierOp}
 
@@ -47,7 +47,9 @@ object TelcoPipelines {
 
   /** Process one decoded celltower frame against the current attach
     * store and model — the shared enrichment prefix plus all three use
-    * cases. Works on a batch table or inside `foreachBatch`.
+    * cases. Works on a batch table or inside `foreachBatch`. Window
+    * geometry, watermark, k-means dimensions and the fence file come
+    * from `config`.
     *
     * S8: `enriched` feeds all four outputs, so it is persisted for the
     * batch (the reference caches the same prefix,
@@ -57,12 +59,9 @@ object TelcoPipelines {
     */
   def processBatch(celltower: DataFrame, attachStore: Option[DataFrame],
                    km: IncrementalKMeans,
-                   kmeansDims: Seq[String] = Seq("rtt", "byteLoss"),
-                   train: Boolean = true,
-                   windowSize: String = "30 seconds",
-                   slide: String = "2 seconds",
-                   watermark: String = "1 minute",
-                   fenceFile: Option[String] = None): Outputs = {
+                   config: PipelineConfig = PipelineConfig(),
+                   train: Boolean = true): Outputs = {
+    val spark = celltower.sparkSession
     val enriched = (attachStore match {
       case Some(store) =>
         StreamOps.enrich(celltower,
@@ -72,28 +71,25 @@ object TelcoPipelines {
     }).persist()
     val withTs = enriched.withColumn("ts", Model.eventTime(col("ts")))
 
-    val subscriberStats = StreamOps.metricStats(
-      withTs.withColumn("subscriber_id", col("subscriber.id")),
-      Seq("subscriber_id"), windowSize, slide, watermark)
-    val celltowerStats = StreamOps.metricStats(
-      withTs.withColumn("cell", col("celltower.cell")), Seq("cell"),
-      windowSize, slide, watermark)
+    def stats(frame: DataFrame, key: String) = StreamOps.metricStats(frame,
+      Seq(key), config.metricsWindow, config.metricsSlide, config.watermark)
+    val subscriberStats = stats(
+      withTs.withColumn("subscriber_id", col("subscriber.id")), "subscriber_id")
+    val celltowerStats = stats(
+      withTs.withColumn("cell", col("celltower.cell")), "cell")
 
     val points = enriched.select(
       col("bearerId").as("id"),
       col("celltower.location.lat").as("lat"),
       col("celltower.location.lng").as("lng"))
     // S6: a configured fence file is re-read per batch (hot reload)
-    val geofenceHits = fenceFile match {
-      case Some(f) => GeofenceOp.geofenceWith(points,
-        GeofenceOp.fencesFromJson(celltower.sparkSession, f))
-      case None => GeofenceOp.geofence(points)
-    }
+    val geofenceHits = GeofenceOp.geofenceWith(points, config.geofenceFile
+      .fold(GeofenceOp.fencesDf(spark))(GeofenceOp.fencesFromJson(spark, _)))
 
+    val dims = config.kmeansDimensions
     val vectored = enriched
-      .withColumn("v", metricsVector(kmeansDims))
-      .where(kmeansDims.map(d => col("metrics").getItem(d).isNotNull)
-        .reduce(_ && _))
+      .withColumn("v", metricsVector(dims))
+      .where(dims.map(d => col("metrics").getItem(d).isNotNull).reduce(_ && _))
     if (train) km.update(vectored, "v")
     val scored = km.transform(vectored, "v").persist()
     val anomalies = OutlierOp.outliers(scored, "prediction", "dist")
@@ -103,66 +99,18 @@ object TelcoPipelines {
       cached = Seq(enriched, scored))
   }
 
-  /** Shared wiring for both `start` overloads: attach stream feeds the
-    * upsert store; celltower stream runs the fan-out per micro-batch
-    * (stream-static join against the store as of each batch — the
-    * reference's Cassandra-lookup semantics,
-    * `TrafficStreamProcessor.scala:52-56`). W1: the micro-batch clock is
-    * the optional trigger; W4: checkpointing per query under
-    * `checkpointDir/<name>`.
-    */
-  private def wire(attachStream: DataFrame, celltowerStream: DataFrame,
-                   store: KeyedUpsertStore, sink: (Outputs, Long) => Unit,
-                   runBatch: (DataFrame, Option[DataFrame], Long) => Outputs,
-                   trigger: Option[Trigger],
-                   checkpointDir: Option[String],
-                   afterBatch: Long => Unit = _ => ()): Seq[StreamingQuery] = {
-    def configure(w: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
-                  name: String) = {
-      val t = trigger.map(w.trigger).getOrElse(w)
-      checkpointDir.map(d => t.option("checkpointLocation", s"$d/$name"))
-        .getOrElse(t)
-    }
-    val attachQ = configure(attachStream.writeStream.outputMode("append"), "attach")
-      .foreachBatch((batch: DataFrame, _: Long) => store.upsert(batch))
-      .start()
-    val fanoutQ = configure(celltowerStream.writeStream.outputMode("append"), "fanout")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val out = runBatch(batch, store.current, id)
-        try sink(out, id) finally out.release()
-        // post-sink state snapshot hook (model checkpoint). Runs
-        // BEFORE the batch's offset commit, so a crash in the gap
-        // replays the batch — OUTPUTS are at-least-once (the
-        // reference's ssc.checkpoint semantics too), but the MODEL
-        // update is exactly-once: runBatch sees the batch id and
-        // skips km.update for ids at or below the snapshot's
-        // lastAppliedBatch (r15 advice — no silent double-apply).
-        afterBatch(id)
-      }
-      .start()
-    Seq(attachQ, fanoutQ)
-  }
-
-  /** Streaming wiring with explicit parameters (reference defaults). */
-  def start(attachStream: DataFrame, celltowerStream: DataFrame,
-            storePath: String, km: IncrementalKMeans,
-            sink: (Outputs, Long) => Unit,
-            kmeansDims: Seq[String] = Seq("rtt", "byteLoss"),
-            trigger: Option[Trigger] = None,
-            checkpointDir: Option[String] = None): Seq[StreamingQuery] = {
-    val store = new KeyedUpsertStore(attachStream.sparkSession, storePath,
-      "bearerId", "ts")
-    wire(attachStream, celltowerStream, store, sink,
-      (batch, cur, _) => processBatch(batch, cur, km, kmeansDims),
-      trigger, checkpointDir)
-  }
-
   /** Config-file-driven wiring — the analog of the reference booting its
-    * whole topology from `application.conf` (`AppConfig.scala:10-53`).
-    * Every knob (micro-batch clock, checkpoint, store path, window
-    * geometry, k-means hyper-parameters, fence file) comes from
-    * [[PipelineConfig]]; the model is built from the config too. Returns
-    * the running queries plus the model handle.
+    * whole topology from `application.conf` (`AppConfig.scala:10-53`),
+    * and the only way to wire it. Every knob (micro-batch clock,
+    * checkpoint, store path, window geometry, k-means hyper-parameters,
+    * fence file) comes from [[PipelineConfig]]; the model is built from
+    * the config too. The attach stream feeds the upsert store; the
+    * celltower stream runs the fan-out per micro-batch (stream-static
+    * join against the store as of each batch — the reference's
+    * Cassandra-lookup semantics, `TrafficStreamProcessor.scala:52-56`).
+    * W1: the micro-batch clock is the config's trigger; W4: each query
+    * checkpoints under `checkpoint/<name>`. Returns the running queries
+    * plus the model handle.
     */
   def start(config: PipelineConfig, attachStream: DataFrame,
             celltowerStream: DataFrame,
@@ -178,21 +126,33 @@ object TelcoPipelines {
     // where the dead topology stopped (PipelineSpec restart e2e).
     val kmPath = config.checkpoint.map(d => s"$d/kmeans-model")
     kmPath.foreach(km.restoreFrom)
-    val queries = wire(attachStream, celltowerStream, store, sink,
-      // train only on batches NEWER than the restored snapshot's
-      // last-applied id: a batch replayed after a crash in the
-      // snapshot→offset-commit gap re-emits its outputs
-      // (at-least-once) but must not re-enter the model state
-      (batch, cur, id) => processBatch(batch, cur, km,
-        kmeansDims = config.kmeansDimensions,
-        train = id > km.lastAppliedBatch,
-        windowSize = config.metricsWindow, slide = config.metricsSlide,
-        watermark = config.watermark, fenceFile = config.geofenceFile),
-      Some(config.trigger), config.checkpoint,
-      afterBatch = id => {
+    def configure(stream: DataFrame, name: String) = {
+      val w = stream.writeStream.outputMode("append").trigger(config.trigger)
+      config.checkpoint.fold(w)(d => w.option("checkpointLocation", s"$d/$name"))
+    }
+    val attachQ = configure(attachStream, "attach")
+      .foreachBatch((batch: DataFrame, _: Long) => store.upsert(batch))
+      .start()
+    val fanoutQ = configure(celltowerStream, "fanout")
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        // train only on batches NEWER than the restored snapshot's
+        // last-applied id: a batch replayed after a crash in the
+        // snapshot→offset-commit gap re-emits its outputs
+        // (at-least-once) but must not re-enter the model state
+        val out = processBatch(batch, store.current, km, config,
+          train = id > km.lastAppliedBatch)
+        try sink(out, id) finally out.release()
+        // post-sink state snapshot (model checkpoint). Runs
+        // BEFORE the batch's offset commit, so a crash in the gap
+        // replays the batch — OUTPUTS are at-least-once (the
+        // reference's ssc.checkpoint semantics too), but the MODEL
+        // update is exactly-once: the guard above sees the batch id and
+        // skips km.update for ids at or below the snapshot's
+        // lastAppliedBatch (r15 advice — no silent double-apply).
         km.lastAppliedBatch = id
         kmPath.foreach(km.saveTo)
-      })
-    (queries, km)
+      }
+      .start()
+    (Seq(attachQ, fanoutQ), km)
   }
 }

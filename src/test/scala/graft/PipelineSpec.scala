@@ -41,11 +41,14 @@ class PipelineSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-e2e").toString
     val attachMem = MemoryStream[AttachEvent]
     val ctMem = MemoryStream[CelltowerEvent]
-    val km = new IncrementalKMeans(k = 2, dims = 2, decay = 1.0, seed = 1L)
+    // k = 2 over the default two dims, decay 1.0, seed 1; batchMillis 0
+    // is Spark's default trigger
+    val config = streaming.PipelineConfig(storePath = s"$dir/attach",
+      kmeansK = 2, batchMillis = 0L)
 
     @volatile var lastOut: Option[TelcoPipelines.Outputs] = None
-    val queries = TelcoPipelines.start(
-      attachMem.toDF(), ctMem.toDF(), s"$dir/attach", km,
+    val (queries, _) = TelcoPipelines.start(
+      config, attachMem.toDF(), ctMem.toDF(),
       (out, _) => lastOut = Some(out))
     try {
       // batch 1: attach events land first (store fills)
@@ -305,7 +308,8 @@ class PipelineSpec extends SparkSuite {
     val attachDf = Seq(attach("b1", 1, 1000L)).toDF()
     val ctDf = Seq(ct("b1", 10000L, 10.0, 0.1), ct("b1", 12000L, 12.0, 0.2)).toDF()
     val km = new IncrementalKMeans(k = 2, dims = 2, decay = 1.0, seed = 1L)
-    val out = TelcoPipelines.processBatch(ctDf, Some(attachDf), km)
+    val out = TelcoPipelines.processBatch(ctDf, Some(attachDf), km,
+      streaming.PipelineConfig())
     assert(out.cached.nonEmpty)
     out.cached.foreach(df =>
       assert(df.storageLevel.useMemory, "shared prefix not cached"))
@@ -337,6 +341,46 @@ class PipelineSpec extends SparkSuite {
       streaming.PipelineConfig.fromJson("""{"kmaensK": 2}""")
     }
     assert(err.getMessage.contains("kmaensK"))
+
+    // out-of-range values fail at construction and name their key
+    def rejects(json: String, key: String): Unit = {
+      val e = intercept[IllegalArgumentException](
+        streaming.PipelineConfig.fromJson(json))
+      assert(e.getMessage.contains(key), e.getMessage)
+    }
+    rejects("""{"kmeansDimensions": []}""", "kmeansDimensions")
+    rejects("""{"kmeansK": 0}""", "kmeansK")
+    rejects("""{"metricsSlideMillis": 0}""", "metricsSlideMillis")
+    rejects("""{"metricsWindowMillis": 1000, "metricsSlideMillis": 2000}""",
+      "metricsSlideMillis")
+    rejects("""{"batchMillis": -1}""", "batchMillis")
+    assert(d.copy(batchMillis = 0L).batchMillis === 0L)
+    assert(streaming.PipelineConfig(kmeansK = 1).kmeansK === 1)
+
+    // every field set away from its default round-trips equal
+    val all = streaming.PipelineConfig(batchMillis = 250L,
+      checkpoint = Some("/tmp/cp2"), storePath = "/tmp/store2",
+      attachTopic = "a2", celltowerTopic = "c2",
+      subscriberStatsTopic = "ss2", celltowerStatsTopic = "cs2",
+      kmeansOutlierTopic = "ko2", geofenceTopic = "g2",
+      kafkaBootstrap = "broker:9093", metricsWindowMillis = 60000L,
+      metricsSlideMillis = 5000L, watermark = "5 minutes",
+      kmeansDimensions = Seq("byteLoss", "rtt", "jitter"), kmeansK = 4,
+      kmeansDecay = 0.75, kmeansSeed = 11L, geofenceFile = Some("/tmp/f.json"))
+    all.productIterator.zip(d.productIterator).zip(all.productElementNames)
+      .foreach { case ((a, b), name) => assert(a !== b, s"$name left at default") }
+    val allJson =
+      """{"batchMillis": 250, "checkpoint": "/tmp/cp2",
+        | "storePath": "/tmp/store2", "attachTopic": "a2",
+        | "celltowerTopic": "c2", "subscriberStatsTopic": "ss2",
+        | "celltowerStatsTopic": "cs2", "kmeansOutlierTopic": "ko2",
+        | "geofenceTopic": "g2", "kafkaBootstrap": "broker:9093",
+        | "metricsWindowMillis": 60000, "metricsSlideMillis": 5000,
+        | "watermark": "5 minutes",
+        | "kmeansDimensions": ["byteLoss", "rtt", "jitter"], "kmeansK": 4,
+        | "kmeansDecay": 0.75, "kmeansSeed": 11,
+        | "geofenceFile": "/tmp/f.json"}""".stripMargin
+    assert(streaming.PipelineConfig.fromJson(allJson) === all)
   }
 
   test("config fixture drives the whole topology (windows, k, dims, fence file)") {

@@ -576,6 +576,25 @@ class StreamingSpec extends SparkSuite {
     assert(preds(0).getInt(0) !== preds(1).getInt(0))
   }
 
+  test("incremental k-means with k = 1: one cluster, dist is the distance to its centre") {
+    val pts = Seq(Array(1.0, 2.0), Array(3.0, -1.0), Array(-2.0, 0.5))
+    val df = pts.map(Tuple1(_)).toDF("v")
+    val km = new IncrementalKMeans(k = 1, dims = 2, decay = 1.0, seed = 3L)
+    km.update(df, "v")
+    assert(km.currentCounts.toSeq === Seq(3.0))
+    val c = km.currentCenters.head
+    val mean = Array(pts.map(_(0)).sum / 3, pts.map(_(1)).sum / 3)
+    c.zip(mean).foreach { case (got, want) => assert(math.abs(got - want) < 1e-6) }
+    val scored = km.transform(df, "v").select($"v", $"prediction", $"dist")
+      .as[(Seq[Double], Int, Double)].collect()
+    assert(scored.length === 3)
+    scored.foreach { case (v, p, dist) =>
+      assert(p === 0)
+      val want = math.sqrt(v.zip(c).map { case (x, y) => (x - y) * (x - y) }.sum)
+      assert(math.abs(dist - want) < 1e-12, s"dist $dist for $v, want $want")
+    }
+  }
+
   test("streamingTokenBudget equals batch tokenBudgetMix on a hash-ordered replay") {
     import graft.operators.ScaleOps
     implicit val sqlCtx = spark.sqlContext
