@@ -100,27 +100,6 @@ object DedupOp {
           .as(Seq("i", "minv")))
   }
 
-  /** The full [[NumPerms]]-element MinHash signature as ONE row-local
-    * array column — `array_min(transform(...))` per permutation, no
-    * explode, no shuffle. Same values as [[minhashSignatures]]'s
-    * aggregate formulation (min over the shingle stream commutes with
-    * the per-shingle permutation hash; asserted in DedupAndTextSpec) —
-    * this is the STATELESS form the streaming near-dup path needs,
-    * where an aggregate would burn the one stateful-operator slot the
-    * query has. Docs with no shingles (< w tokens) yield an array of
-    * nulls (array_min of empty is null); callers filter on
-    * `size(shingles) > 0` first.
-    */
-  def minhashSignatureArray(text: Column): Column = {
-    // no distinct: min() is idempotent over duplicate shingles, same
-    // reasoning as the aggregate form
-    val hx = transform(shingles(tokens(text)), s => portableHash(s))
-    array((0 until NumPerms).map { i =>
-      array_min(transform(hx, h =>
-        (lit(permA(i)) * h + lit(permB(i))) % lit(HashMod)))
-    }: _*)
-  }
-
   /** MinHash + LSH near-dup pairs: banded candidate generation, then
     * signature-similarity verification (fraction of equal minhashes ≥
     * `minSim`).
@@ -572,22 +551,21 @@ object DedupOp {
     * the per-doc hit counts and the tiny flagged-doc join-back.
     */
   /** Per-doc distinct w-gram strings (doc_id, `keep`..., sh) — the
-    * shared gram pipeline of the batch AND streaming decontamination
-    * paths ([[decontaminate]],
-    * [[graft.streaming.StreamOps.streamingDecontaminate]]). EXACT
-    * strings, not [[docShingles]]'s portable hashes: a contamination
-    * filter deletes training data on a hit, so the prefix-hash's
-    * collisions (acceptable when they merely merge two shingles
-    * consistently in a Jaccard estimate) would be false positives —
-    * one decision, one definition, both callers.
+    * gram pipeline shared by [[decontaminate]] and
+    * [[bloomDecontaminate]]. EXACT strings, not [[docShingles]]'s
+    * portable hashes: a contamination filter deletes training data on
+    * a hit, so the prefix-hash's collisions (acceptable when they
+    * merely merge two shingles consistently in a Jaccard estimate)
+    * would be false positives — one decision, one definition, both
+    * callers.
     */
-  private[graft] def docGrams(d: DataFrame, w: Int,
-                              keep: Column*): DataFrame =
+  private def docGrams(d: DataFrame, w: Int,
+                       keep: Column*): DataFrame =
     d.select((col("doc_id") +: keep :+
       explode(array_distinct(shingles(tokens(col("text")), w))).as("sh")): _*)
 
   /** The eval slice's distinct gram set — the broadcast side. */
-  private[graft] def evalGramSet(evalDocs: DataFrame, w: Int): DataFrame =
+  private def evalGramSet(evalDocs: DataFrame, w: Int): DataFrame =
     docGrams(evalDocs, w).select(col("sh")).distinct()
 
   def decontaminate(docs: DataFrame, evalSource: String = "src0",

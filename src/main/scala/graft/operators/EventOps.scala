@@ -296,16 +296,10 @@ object EventOps {
     peakFromSessions(sessionize(events, gapMs)
       .select(col("start_ms"), col("end_ms")))
 
-  /** The sweep-line rollup of [[peakConcurrency]], factored to accept
-    * any (start_ms, end_ms) session frame — the batch operator feeds it
-    * [[sessionize]]'s output; the streaming path feeds it the CLOSED
-    * sessions [[graft.streaming.StreamOps.streamingSessionize]] emits
-    * (equality proven in StreamingSpec). The profile is an at-rest
-    * rollup over landed sessions, not a third stateful operator: peaks
-    * need every session boundary of an hour, which is only final once
-    * the watermark closes it — exactly when the session lands.
+  /** The sweep-line rollup of [[peakConcurrency]] over a
+    * (start_ms, end_ms) session frame — [[sessionize]]'s output.
     */
-  def peakFromSessions(sessions: DataFrame): DataFrame = {
+  private def peakFromSessions(sessions: DataFrame): DataFrame = {
     val hourMs = 3600000L
     // both boundaries come from ONE narrow Generate (explode of a
     // 2-element struct array), not a self-union — a union would plant

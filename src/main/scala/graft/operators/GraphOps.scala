@@ -394,17 +394,16 @@ object GraphOps {
                       minSupport: Long = 2L): DataFrame = {
     val li = lineitem.select(col("l_orderkey").as("ok"),
       col("l_partkey").as("pk")).distinct()
-    // r17 (verdict item 6): the basket self-join reliably prefers a
-    // shuffled-hash join over the planner's sort-merge pick (r16
-    // ProfJoin session-flip: q115 −0.4 s, the one join-heavy query with
-    // a uniform SHJ win) — but a SESSION flip regressed q164, so the
-    // hint is scoped to THIS join only (guide §3.1: per-join choice,
-    // planner stats mis-pick SMJ here; both sides are the same
-    // basket-distinct frame, so no build-side OOM asymmetry).
-    // `spark.graft.triples.smj=true` restores the stock pick (A/B ref).
-    val stockJoin = lineitem.sparkSession.conf
-      .getOption("spark.graft.triples.smj").contains("true")
-    val rSide = if (stockJoin) li.as("r") else li.hint("shuffle_hash").as("r")
+    // r17 (verdict item 6): the basket self-join takes a shuffled-hash
+    // join over the planner's sort-merge pick (q115 −0.4 s, measured
+    // only at sf0.1). A session-wide flip regressed q164, so the hint
+    // is scoped to this join. Condition: each build partition's
+    // (ok, pk) hash table must fit in executor memory — shuffled hash
+    // join does not spill where sort-merge would, so at a scale where
+    // one partition's basket rows outgrow memory this hint fails
+    // instead of slowing down. Re-measure at a larger scale factor
+    // before relying on it there.
+    val rSide = li.hint("shuffle_hash").as("r")
     val pairs = li.as("l").join(rSide,
         col("l.ok") === col("r.ok") && col("l.pk") < col("r.pk"))
       .select(col("l.ok").as("ok"), col("l.pk").as("a"), col("r.pk").as("b"))

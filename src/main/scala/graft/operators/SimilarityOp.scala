@@ -1962,37 +1962,16 @@ object SimilarityOp {
       .reduce(_.unionByName(_))
     val w = Window.partitionBy(col("config"), col("qid"))
       .orderBy(col("sim").desc, col("vec_id"))
-    // A/B switch, MEASURED NEGATIVE and kept default-off (r16 opt
-    // round, ProfDedup ×4 same-window): arms share many (qid, vec_id)
-    // pairs, so scoring the DISTINCT pairs once and joining the sims
-    // back trades ~the duplication factor of map-side codegen cosine
-    // for one extra exchange of the candidate frame. The exchange
-    // loses: q85 base 3.05-3.79 s vs dedup 3.62-4.09 steady, q84/q157
-    // wash-to-base, q153 −0.1 s — the 64-dim cosine is too cheap to
-    // out-cost a shuffle of the plan's largest frame (same verdict
-    // class as the r9/r16 persist rejections). Identical values either
-    // way (same sim per pair, same window; SimilaritySpec parity test),
-    // so the switch stays for re-measurement at other scales — the
-    // sigLayout-flag precedent.
-    val dedupScore = embeddings.sparkSession.conf
-      .getOption("spark.graft.recallArms.dedupScore").contains("true")
-    // scored construction lives inside its arm (r16 advice: the former
-    // `else null` sentinel was only consumed under the same flag but
-    // invited an NPE on any refactor that split the two conditionals)
-    val tagged =
-      if (dedupScore) {
-        val scored = cands.select(col("qid"), col("vec_id")).distinct()
-          .join(corpusVecs(embeddings), Seq("vec_id"))
-          .join(broadcast(qframe), Seq("qid"))
-          .select(col("qid"), col("vec_id"),
-            round(graft.functions.CosineExpr.column(col("qv"), col("v")),
-              6).as("sim"))
-        cands.join(scored, Seq("qid", "vec_id"))
-      } else cands.join(corpusVecs(embeddings), Seq("vec_id"))
-        .join(broadcast(qframe), Seq("qid"))
-        .select(col("config"), col("qid"), col("vec_id"),
-          round(graft.functions.CosineExpr.column(col("qv"), col("v")), 6)
-            .as("sim"))
+    // Each arm's pairs are scored where they stand. Scoring the
+    // DISTINCT (qid, vec_id) pairs once and joining the sims back was
+    // measured slower (same-window ×4 at sf0.1, q85 3.05–3.79 s vs
+    // 3.62–4.09 s; OPTIMIZATION_r16.md): the 64-dim cosine is cheaper
+    // than an extra exchange of the plan's largest frame.
+    val tagged = cands.join(corpusVecs(embeddings), Seq("vec_id"))
+      .join(broadcast(qframe), Seq("qid"))
+      .select(col("config"), col("qid"), col("vec_id"),
+        round(graft.functions.CosineExpr.column(col("qv"), col("v")), 6)
+          .as("sim"))
     // r17: rank via the native bounded BottomKExpr fold instead of the
     // row_number window (the r16-verdict lead): the window shuffles the
     // FULL tagged candidate expansion into per-(config, qid) sorts,

@@ -254,9 +254,7 @@ object TemporalOps {
     *
     * Scale shape: two window passes over the SAME (key)-partitioned
     * sort — Catalyst plans one Exchange+Sort and reuses it; nothing is
-    * global, state per key is one row of lookback. (The streaming form
-    * is [[graft.streaming.StreamOps]]' keyed-state pattern: keep the
-    * last attr per key, emit a closed version on change.)
+    * global, state per key is one row of lookback.
     */
   def scd2(obs: DataFrame, keyCol: String, attrCol: String,
            msCol: String, tieCol: String): DataFrame = {

@@ -42,6 +42,9 @@ final case class PipelineConfig(
       s"$metricsWindowMillis], got $metricsSlideMillis")
   require(kmeansDimensions.nonEmpty, "kmeansDimensions: must name at least one metric")
   require(kmeansK >= 1, s"kmeansK: must be >= 1, got $kmeansK")
+  // MLlib's StreamingKMeans.setDecayFactor has the same rule: a negative
+  // decay drives the weighted count n·α + m toward 0 and the centres to NaN
+  require(kmeansDecay >= 0, s"kmeansDecay: must be >= 0, got $kmeansDecay")
 
   def metricsWindow: String = s"$metricsWindowMillis milliseconds"
   def metricsSlide: String = s"$metricsSlideMillis milliseconds"
@@ -85,11 +88,19 @@ object PipelineConfig {
       case Some(JNull) | None => None
       case Some(o) => throw new IllegalArgumentException(s"$k: expected string, got $o")
     }
-    def num(k: String, dflt: Long): Long = fields.get(k) match {
-      case Some(JInt(n)) => n.toLong
-      case Some(JLong(n)) => n
-      case Some(o) => throw new IllegalArgumentException(s"$k: expected integer, got $o")
-      case None => dflt
+    // integers are range-checked before narrowing: BigInt.toLong/toInt
+    // wrap silently (2^32 + 1 would become kmeansK = 1)
+    def num(k: String, dflt: Long, lo: Long = Long.MinValue,
+            hi: Long = Long.MaxValue): Long = {
+      def inRange(n: BigInt): Long =
+        if (n >= lo && n <= hi) n.toLong
+        else throw new IllegalArgumentException(s"$k: must be in [$lo, $hi], got $n")
+      fields.get(k) match {
+        case Some(JInt(n)) => inRange(n)
+        case Some(JLong(n)) => inRange(n)
+        case Some(o) => throw new IllegalArgumentException(s"$k: expected integer, got $o")
+        case None => dflt
+      }
     }
     def dbl(k: String, dflt: Double): Double = fields.get(k) match {
       case Some(JDouble(d)) => d
@@ -122,7 +133,7 @@ object PipelineConfig {
       metricsSlideMillis = num("metricsSlideMillis", d.metricsSlideMillis),
       watermark = str("watermark", d.watermark),
       kmeansDimensions = strs("kmeansDimensions", d.kmeansDimensions),
-      kmeansK = num("kmeansK", d.kmeansK).toInt,
+      kmeansK = num("kmeansK", d.kmeansK, Int.MinValue, Int.MaxValue).toInt,
       kmeansDecay = dbl("kmeansDecay", d.kmeansDecay),
       kmeansSeed = num("kmeansSeed", d.kmeansSeed),
       geofenceFile = optStr("geofenceFile"))

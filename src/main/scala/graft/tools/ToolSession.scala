@@ -3,8 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** THE local session config — one source of truth shared by the graded
-  * bench main ([[graft.Bench]]) and every profiling tool (RunOne,
-  * Prof*). A tool reading is only comparable to the graded bench if the
+  * bench main ([[graft.Bench]]) and the dev tools (RunOne,
+  * ExplainDump). A tool reading is only comparable to the graded bench if the
   * session carries the same perf-critical knobs; before this was
   * shared, RunOne ran on Spark defaults and over-read codegen-heavy
   * queries ~2× (r14 measurement: q85 5.2 s "steady" under the default
@@ -34,7 +34,7 @@ import org.apache.spark.sql.SparkSession
 object ToolSession {
   def build(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       : SparkSession = {
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
@@ -51,33 +51,7 @@ object ToolSession {
       .config("spark.ui.retainedTasks", "2000")
       .config("spark.worker.ui.retainedExecutors", "10")
       .config("spark.cleaner.periodicGC.interval", "2min")
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k=v": A/B harness hook — overlay
-    // arbitrary conf pairs on the bench-grade session WITHOUT a
-    // rebuild, so a knob experiment (join strategy, AQE thresholds)
-    // measures against the identical baseline session. Default unset =
-    // bit-identical config; the graded bench never sets it. Values may
-    // not contain ';' (the pair separator — r16 advice).
-    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .toSeq.flatMap(_.split(";").map(_.trim).filter(_.contains("=")))
-      .map { kv =>
-        val i = kv.indexOf('=')
-        (kv.substring(0, i).trim, kv.substring(i + 1).trim)
-      }
-    val spark = extra.foldLeft(builder) { (b, kv) =>
-      b.config(kv._1, kv._2) }.getOrCreate()
-    // builder.config is silently ignored when getOrCreate() returns a
-    // pre-existing session — an A/B run would then measure the baseline
-    // while believing the overlay applied (r16 advice). Fail LOUDLY on
-    // any overlay key the live session does not carry at the requested
-    // value (static/core confs can't be read back — best-effort get).
-    for ((k, v) <- extra) {
-      val live = try spark.conf.getOption(k) catch { case _: Throwable => None }
-      if (!live.contains(v))
-        throw new IllegalStateException(
-          s"SPARK_GRAFT_EXTRA_CONF: '$k=$v' did not take (live: " +
-            s"${live.getOrElse("<unset>")}) — a SparkSession already " +
-            "existed in this JVM; overlays only apply to a fresh session")
-    }
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -387,23 +387,6 @@ class DedupAndTextSpec extends SparkSuite {
     assert(resized(0L).length === (b.length + 2) / 3)
   }
 
-  test("row-local minhash signature array equals the aggregate form") {
-    import org.apache.spark.sql.functions.col
-    val viaAgg = DedupOp.minhashSignatures(docs).collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("i")) ->
-        r.getAs[Long]("minv")).toMap
-    val viaArr = docs
-      .select(col("doc_id"), DedupOp.minhashSignatureArray(col("text")).as("sig"))
-      .collect().map(r => r.getAs[Long]("doc_id") -> r.getSeq[Long](1)).toMap
-    assert(viaArr.size === 4)
-    viaArr.foreach { case (id, sig) =>
-      assert(sig.length === DedupOp.NumPerms)
-      sig.zipWithIndex.foreach { case (v, i) =>
-        assert(viaAgg((id, i)) === v, s"doc $id perm $i")
-      }
-    }
-  }
-
   test("chunking: stride starts, partial tail, and content hashes") {
     import org.apache.spark.sql.functions.col
     // 10 tokens, chunk 4, stride 3 → starts 0,3,6,9 → sizes 4,4,4,1

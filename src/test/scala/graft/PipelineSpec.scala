@@ -354,6 +354,16 @@ class PipelineSpec extends SparkSuite {
     rejects("""{"metricsWindowMillis": 1000, "metricsSlideMillis": 2000}""",
       "metricsSlideMillis")
     rejects("""{"batchMillis": -1}""", "batchMillis")
+    rejects("""{"kmeansDecay": -0.5}""", "kmeansDecay")
+    // integers outside the field's type fail instead of wrapping into a
+    // valid value (2^32 + 1 → kmeansK 1, 2^64 + 1000 → batchMillis 1000,
+    // Long.MinValue − 1 → kmeansSeed Long.MaxValue)
+    rejects("""{"kmeansK": 4294967297}""", "kmeansK")
+    rejects("""{"batchMillis": 18446744073709552616}""", "batchMillis")
+    rejects("""{"kmeansSeed": -9223372036854775809}""", "kmeansSeed")
+    assert(streaming.PipelineConfig.fromJson(
+      """{"kmeansSeed": -9223372036854775808, "kmeansDecay": 0}""") ===
+      d.copy(kmeansSeed = Long.MinValue, kmeansDecay = 0.0))
     assert(d.copy(batchMillis = 0L).batchMillis === 0L)
     assert(streaming.PipelineConfig(kmeansK = 1).kmeansK === 1)
 

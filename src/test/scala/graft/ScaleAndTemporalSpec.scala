@@ -500,20 +500,6 @@ class ScaleAndTemporalSpec extends SparkSuite {
     assert(lazyForm.nonEmpty && lazyForm === eager)
   }
 
-  test("textRank persistEdges switch is row-identical to the lazy default (r17)") {
-    import graft.operators.TextOps
-    val docs = graft.tables.Tables.documents(spark, sfDir)
-    def rows(): Seq[(String, Long)] =
-      TextOps.textRank(docs, k = 20, minCount = 2L).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val lazyDefault = rows()
-    spark.conf.set("spark.graft.textrank.persistEdges", "true")
-    val persisted =
-      try rows()
-      finally spark.conf.unset("spark.graft.textrank.persistEdges")
-    assert(lazyDefault.nonEmpty && persisted === lazyDefault)
-  }
-
   test("LOCF resample fails loudly on a span past maxSlots (corrupt timestamp)") {
     import graft.operators.EventOps
     import org.apache.spark.sql.functions.timestamp_millis

@@ -154,56 +154,6 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("streamingDecontaminate emits hits equal to the batch operator's flags") {
-    implicit val sqlCtx = spark.sqlContext
-    val evalDocs = Seq((100L, "alpha beta gamma delta epsilon zeta"))
-      .toDF("doc_id", "text")
-    val mem = MemoryStream[(Long, String)]
-    val stream = mem.toDF().toDF("doc_id", "text")
-    val hits = StreamOps.streamingDecontaminate(stream, evalDocs, w = 5)
-    val q = hits.writeStream.outputMode("append")
-      .format("memory").queryName("decon_out").start()
-    try {
-      mem.addData(
-        (1L, "x alpha beta gamma delta epsilon y"), // 1 shared 5-gram
-        (2L, "alpha beta gamma delta OTHER tail"),  // prefix only — clean
-        (3L, "one two three four five six"))        // disjoint
-      q.processAllAvailable()
-      // batch 2: another contaminated arrival, stateless across batches
-      mem.addData((4L, "beta gamma delta epsilon zeta end"))
-      q.processAllAvailable()
-      val flagged = spark.table("decon_out").select($"doc_id").as[Long]
-        .collect().toSet
-      assert(flagged === Set(1L, 4L))
-    } finally q.stop()
-  }
-
-  test("streamingDedup drops repeated content hashes across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Long)] // (doc_id, text, ts_sec)
-    val docs = mem.toDF().toDF("doc_id", "text", "ts_sec")
-      .withColumn("ts", timestamp_seconds(col("ts_sec")))
-      .withColumn("h", md5(col("text")))
-    val deduped = StreamOps.streamingDedup(docs, Seq("h"),
-      tsCol = "ts", watermark = "10 minutes")
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("dedup_out").start()
-    try {
-      mem.addData((1L, "alpha", 10L), (2L, "alpha", 11L), (3L, "beta", 12L))
-      q.processAllAvailable()
-      // batch 2: duplicate of batch 1 within the watermark horizon
-      mem.addData((4L, "alpha", 20L), (5L, "gamma", 21L))
-      q.processAllAvailable()
-      val kept = spark.table("dedup_out").select($"doc_id").as[Long]
-        .collect().toSet
-      // one survivor per distinct text: alpha (1 or 2, first wins in-batch),
-      // beta, gamma; cross-batch duplicate 4 dropped
-      assert(kept.intersect(Set(1L, 2L)).size === 1)
-      assert(kept.contains(3L) && kept.contains(5L))
-      assert(!kept.contains(4L))
-    } finally q.stop()
-  }
-
   test("session windows run under streaming: merge within gap, close past watermark") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Long, Double)] // (user_id, ts_sec, value)
@@ -254,91 +204,6 @@ class StreamingSpec extends SparkSuite {
         .toSet
       assert(got === expected)
       assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("streamingCleanDocs: dedup + quality filter on the stream, near-dup left to batch") {
-    implicit val sqlCtx = spark.sqlContext
-    val good = (1 to 40).map(i => s"tok$i").mkString(" ") // 40 unique tokens
-    val short = "too short"                               // fails minTokens
-    val loops = Seq.fill(40)("same").mkString(" ")        // fails 2*uniq >= n
-    val mem = MemoryStream[(Long, String, Long)]
-    val docs = mem.toDF().toDF("doc_id", "text", "ts_sec")
-      .withColumn("ts", timestamp_seconds(col("ts_sec")))
-    val q = StreamOps.streamingCleanDocs(docs, minTokens = 30)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("clean_out").start()
-    try {
-      mem.addData((1L, good, 10L), (2L, short, 11L), (3L, loops, 12L))
-      q.processAllAvailable()
-      mem.addData((4L, good, 20L)) // exact dup of 1 -> dropped by dedup
-      q.processAllAvailable()
-      val kept = spark.table("clean_out")
-        .select($"doc_id", $"n_tokens", $"n_uniq").as[(Long, Long, Long)]
-        .collect().toSeq
-      assert(kept.map(_._1) === Seq(1L))
-      assert(kept.head._2 === 40L && kept.head._3 === 40L)
-    } finally q.stop()
-  }
-
-  test("streamingNearDup finds the same pairs as batch minhashLsh") {
-    implicit val sqlCtx = spark.sqlContext
-    val base = "alpha bravo charlie delta echo foxtrot golf hotel " +
-      "india juliet kilo lima mike november oscar papa quebec romeo sierra tango"
-    val nearDup = base.replace("oscar", "OSCAR")
-    val distinct1 = "one two three four five six seven eight nine ten " +
-      "eleven twelve thirteen fourteen fifteen sixteen seventeen eighteen nineteen twenty"
-    val corpus = Seq((10L, base), (20L, nearDup), (30L, distinct1))
-    val batchPairs = graft.operators.DedupOp
-      .minhashLsh(corpus.toDF("doc_id", "text"), 0.5)
-      .collect().map(r => (r.getAs[Long]("da"), r.getAs[Long]("db"))).toSet
-    assert(batchPairs.contains((10L, 20L))) // the fixture has a near-dup
-    val mem = MemoryStream[(Long, String, Long)] // (doc_id, text, ts_sec)
-    val docs = mem.toDF().toDF("doc_id", "text", "ts_sec")
-      .withColumn("ts", timestamp_seconds(col("ts_sec")))
-    val hits = StreamOps.streamingNearDup(docs, 0.5)
-    val q = hits.writeStream.outputMode("append")
-      .format("memory").queryName("neardup_out").start()
-    try {
-      // split across micro-batches: 10 lands first, 20/30 arrive later
-      mem.addData((10L, base, 10L))
-      q.processAllAvailable()
-      mem.addData((20L, nearDup, 12L), (30L, distinct1, 13L))
-      q.processAllAvailable()
-      val streamed = spark.table("neardup_out")
-        .select($"da", $"db").as[(Long, Long)].collect().toSet
-      assert(streamed === batchPairs) // same pairs, set-wise (bands repeat)
-    } finally q.stop()
-  }
-
-  test("streamingNearDup evicts bucket state past the horizon") {
-    implicit val sqlCtx = spark.sqlContext
-    val base = "alpha bravo charlie delta echo foxtrot golf hotel " +
-      "india juliet kilo lima mike november oscar papa quebec romeo sierra tango"
-    val unrelated = "uno dos tres cuatro cinco seis siete ocho nueve diez " +
-      "once doce trece catorce quince dieciseis diecisiete dieciocho diecinueve veinte"
-    val mem = MemoryStream[(Long, String, Long)]
-    val docs = mem.toDF().toDF("doc_id", "text", "ts_sec")
-      .withColumn("ts", timestamp_seconds(col("ts_sec")))
-    // tight horizon: state lives 60 s past a bucket's latest event
-    val hits = StreamOps.streamingNearDup(docs, 0.5,
-      watermark = "10 seconds", horizonMs = 60000L)
-    val q = hits.writeStream.outputMode("append")
-      .format("memory").queryName("neardup_evict").start()
-    try {
-      mem.addData((1L, base, 10L))
-      q.processAllAvailable()
-      // unrelated far-future doc advances the watermark way past
-      // 10 s + horizon -> doc 1's buckets time out and are removed
-      mem.addData((2L, unrelated, 500L))
-      q.processAllAvailable()
-      // an exact copy of doc 1 after eviction: no pair may emerge
-      mem.addData((3L, base, 510L))
-      q.processAllAvailable()
-      val streamed = spark.table("neardup_evict")
-        .select($"da", $"db").as[(Long, Long)].collect().toSet
-      assert(streamed.isEmpty,
-        s"expected no pairs after horizon eviction, got $streamed")
     } finally q.stop()
   }
 
@@ -402,127 +267,6 @@ class StreamingSpec extends SparkSuite {
       val latestB1 = rows.filter(_._1 == "b1").maxBy(_._3)
       assert(latestB1._2 === 9)
       assert(rows.filter(_._1 == "b2").map(_._2).toSet === Set(2))
-    } finally q.stop()
-  }
-
-  test("streamingSessionize + peakFromSessions equals batch peakConcurrency on a replay") {
-    import graft.operators.EventOps
-    implicit val sqlCtx = spark.sqlContext
-    // three users, interleaved sessions across hours: u1 has two
-    // sessions (45 min gap), u2 one long session spanning hours, u3 one.
-    // Offset from epoch 0: a row whose event time equals the INITIAL
-    // watermark (0) is dropped as late before reaching the operator.
-    def t(min: Long) = (1000L + min) * 60L // seconds
-    val history = Seq(
-      (1L, 1L, t(0), 1.0), (2L, 1L, t(10), 2.0), (3L, 1L, t(55), 3.0),
-      (4L, 1L, t(70), 1.5),
-      (5L, 2L, t(5), 4.0), (6L, 2L, t(30), 5.0), (7L, 2L, t(50), 6.0),
-      (8L, 2L, t(75), 7.0), (9L, 2L, t(95), 8.0),
-      (10L, 3L, t(130), 9.0))
-    val batchDf = history.toDF("event_id", "user_id", "ts_sec", "value")
-      .withColumn("ts", timestamp_seconds(col("ts_sec")))
-      .select($"event_id", $"user_id", $"ts", $"value")
-    val expectedSessions = EventOps.sessionize(batchDf)
-      .as[(Long, Long, Long, Long, Long, Double)].collect().toSet
-    val expectedPeaks = EventOps.peakConcurrency(batchDf)
-      .as[(Long, Long, Long)].collect().toSeq
-
-    val mem = MemoryStream[(Long, Long, Long, Double)]
-    val events = mem.toDF().toDF("event_id", "user_id", "ts_sec", "value")
-      .withColumn("ts", timestamp_seconds(col("ts_sec")))
-    val q = graft.streaming.StreamOps.streamingSessionize(events)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("sess_stream").start()
-    try {
-      // replay split across micro-batches, in event-time order
-      val (b1, b2) = history.partition(_._3 < t(60))
-      mem.addData(b1.map(e => (e._1, e._2, e._3, e._4)): _*)
-      q.processAllAvailable()
-      mem.addData(b2.map(e => (e._1, e._2, e._3, e._4)): _*)
-      q.processAllAvailable()
-      // far-future sentinel (user 99) advances the watermark past every
-      // session end + gap, closing the open ones via event-time timeout
-      mem.addData((999L, 99L, t(10000), 0.0))
-      q.processAllAvailable()
-      val streamed = spark.table("sess_stream")
-        .where($"userId" =!= 99L)
-      val streamedSessions = streamed
-        .select($"userId", $"sessionId", $"nEvents",
-          $"startMs", $"endMs", round($"sumValue", 4).as("sumValue"))
-        .as[(Long, Long, Long, Long, Long, Double)].collect().toSet
-      // batch sessionize rows are (user, sid, n, start, end, sum)
-      assert(streamedSessions ===
-        expectedSessions.map(s => (s._1, s._2, s._3, s._4, s._5, s._6)))
-      // the streaming peak profile: the batch sweep-line rollup applied
-      // to the landed session stream
-      val streamedPeaks = EventOps.peakFromSessions(
-        streamed.select($"startMs".as("start_ms"), $"endMs".as("end_ms")))
-        .as[(Long, Long, Long)].collect().toSeq
-      assert(streamedPeaks === expectedPeaks)
-    } finally q.stop()
-  }
-
-  test("streamingSessionize merges an in-gap cross-batch straggler backward") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, Long, Double)]
-    val events = mem.toDF().toDF("event_id", "user_id", "ts_sec", "value")
-      .withColumn("ts", timestamp_seconds(col("ts_sec")))
-    val q = graft.streaming.StreamOps.streamingSessionize(events)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("sess_straggler").start()
-    try {
-      mem.addData((1L, 1L, 1030 * 60L, 1.0))
-      q.processAllAvailable() // watermark -> 1020 min
-      // straggler at 1025 min: above the watermark, within the gap of
-      // the open [1030, 1030] session -> must merge and extend START
-      // backward (what batch sessionize's total order would absorb)
-      mem.addData((2L, 1L, 1025 * 60L, 2.0))
-      q.processAllAvailable()
-      mem.addData((999L, 99L, 100000 * 60L, 0.0)) // flush via timeout
-      q.processAllAvailable()
-      val rows = spark.table("sess_straggler").where($"userId" === 1L)
-        .select($"sessionId", $"nEvents", $"startMs", $"endMs", $"sumValue")
-        .as[(Long, Long, Long, Long, Double)].collect().toSeq
-      assert(rows === Seq((0L, 2L, 1025 * 60000L, 1030 * 60000L, 3.0)))
-    } finally q.stop()
-  }
-
-  test("streamingLocfResample equals batch locfResample on a replay") {
-    import graft.operators.EventOps
-    implicit val sqlCtx = spark.sqlContext
-    def t(min: Long) = min * 60L
-    // u1: obs in hours 0, 3 (two-hour gap to fill), another in hour 3
-    // (last-in-slot pick), u2: single observation
-    val history = Seq(
-      (1L, 1L, t(10), 1.0), (2L, 1L, t(190), 2.0), (3L, 1L, t(200), 3.0),
-      (4L, 2L, t(70), 4.0))
-    val batchDf = history.toDF("event_id", "user_id", "ts_sec", "value")
-      .withColumn("ts", timestamp_seconds(col("ts_sec")))
-      .select($"event_id", $"user_id", $"ts", $"value")
-    val expected = EventOps.locfResample(batchDf)
-      .as[(Long, Long, Double, Long)].collect().toSet
-
-    val mem = MemoryStream[(Long, Long, Long, Double)]
-    val events = mem.toDF().toDF("event_id", "user_id", "ts_sec", "value")
-      .withColumn("ts", timestamp_seconds(col("ts_sec")))
-    val q = graft.streaming.StreamOps.streamingLocfResample(events)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("locf_stream").start()
-    try {
-      val (b1, b2) = history.partition(_._3 < t(100))
-      mem.addData(b1.map(e => (e._1, e._2, e._3, e._4)): _*)
-      q.processAllAvailable()
-      mem.addData(b2.map(e => (e._1, e._2, e._3, e._4)): _*)
-      q.processAllAvailable()
-      // sentinel advances the watermark past every slot end, flushing
-      // the full grid; its own slot stays open and is never emitted
-      mem.addData((999L, 99L, t(10000), 0.0))
-      q.processAllAvailable()
-      val streamed = spark.table("locf_stream")
-        .where($"userId" =!= 99L)
-        .select($"userId", $"hrMs", $"locfValue", $"isObs")
-        .as[(Long, Long, Double, Long)].collect().toSet
-      assert(streamed === expected)
     } finally q.stop()
   }
 
@@ -595,120 +339,6 @@ class StreamingSpec extends SparkSuite {
     }
   }
 
-  test("streamingTokenBudget equals batch tokenBudgetMix on a hash-ordered replay") {
-    import graft.operators.ScaleOps
-    implicit val sqlCtx = spark.sqlContext
-    val docs = graft.tables.Tables.documents(spark, "/root/testdata/sf0.001")
-    val expected = ScaleOps.tokenBudgetMix(docs, budget = 300L).collect()
-      .map(r => (r.getLong(0), r.getLong(3))).toSet // (doc_id, cum_tokens)
-
-    // replay in per-source hash order (the batch operator's admission
-    // order), split into two micro-batches at the global midpoint —
-    // each source's cross-batch arrival order stays its hash order
-    val rows = docs.select(col("doc_id"), col("source"), col("text"),
-        ScaleOps.docHash.as("hk"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .sortBy(t => (t._2, t._4, t._1))
-      .map(t => (t._1, t._2, t._3))
-    val (b1, b2) = rows.splitAt(rows.length / 2)
-    val mem = MemoryStream[(Long, String, String)]
-    val stream = mem.toDF().toDF("doc_id", "source", "text")
-    val q = StreamOps.streamingTokenBudget(stream, budget = 300L)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("budget_out").start()
-    try {
-      mem.addData(b1.toIndexedSeq); q.processAllAvailable()
-      mem.addData(b2.toIndexedSeq); q.processAllAvailable()
-      val got = spark.table("budget_out")
-        .select($"docId", $"cumTokens")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got === expected)
-      assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("streamingNoveltyMarks equals batch first-seen attribution on a doc-ordered replay") {
-    import graft.operators.DedupOp
-    implicit val sqlCtx = spark.sqlContext
-    val docs = graft.tables.Tables.documents(spark, "/root/testdata/sf0.001")
-    // batch truth: one (doc, hx, novel) mark per shingle occurrence
-    val sh = DedupOp.docShingles(docs)
-    val firstSeen = sh.groupBy($"hx").agg(min($"doc_id").as("fs"))
-    val expected = sh.join(firstSeen, Seq("hx"))
-      .select($"doc_id", $"hx", ($"doc_id" === $"fs").as("novel"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-
-    // replay ordered by doc_id (arrival order IS doc_id — the batch
-    // operator's min-doc semantics), split into two micro-batches
-    val rows = docs.select($"doc_id", $"text", $"source")
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-      .sortBy(_._1)
-    val (b1, b2) = rows.splitAt(rows.length / 2)
-    val mem = MemoryStream[(Long, String, String)]
-    val stream = mem.toDF().toDF("doc_id", "text", "source")
-    val q = StreamOps.streamingNoveltyMarks(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("novelty_out").start()
-    try {
-      mem.addData(b1.toIndexedSeq); q.processAllAvailable()
-      mem.addData(b2.toIndexedSeq); q.processAllAvailable()
-      val got = spark.table("novelty_out")
-        .select($"docId", $"hx", $"novel")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-        .toSet
-      assert(got === expected)
-      assert(got.exists(_._3) && got.exists(!_._3))
-    } finally q.stop()
-  }
-
-  test("streamingScd2 equals batch scd2 on closed versions over a replay") {
-    import graft.operators.TemporalOps
-    implicit val sqlCtx = spark.sqlContext
-    val ev = graft.tables.Tables.events(spark, "/root/testdata/sf0.001")
-    val expected = TemporalOps.userAttrScd2(ev)
-      .where($"valid_to_ms".isNotNull)
-      .select($"user_id", $"k", $"valid_from_ms", $"valid_to_ms")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-
-    // replay in event-time order split at the time midpoint, so each
-    // micro-batch only carries events at or above the prior watermark
-    val rows = ev
-      .select($"user_id", unix_millis($"ts").as("ms"), $"event_id", $"props")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-      .sortBy(t => (t._2, t._3))
-    val tSplit = rows(rows.length / 2)._2
-    val (b1, b2) = rows.partition(_._2 < tSplit)
-    val mem = MemoryStream[(Long, Long, Long, String)]
-    val stream = mem.toDF().toDF("user_id", "ms", "event_id", "props")
-      .withColumn("ts", timestamp_millis(col("ms")))
-    val q = StreamOps.streamingScd2(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("scd2_out").start()
-    try {
-      mem.addData(b1.toIndexedSeq); q.processAllAvailable()
-      mem.addData(b2.toIndexedSeq); q.processAllAvailable()
-      // sentinel advances the watermark past every observation; each
-      // user's open version stays in state, never emitted (batch's
-      // is_current rows are exactly the ones append mode cannot close)
-      mem.addData((999999L, rows.last._2 + 86400000L, 999999L, "{\"k\": 1}"))
-      q.processAllAvailable()
-      val got = spark.table("scd2_out")
-        .where($"userId" =!= 999999L)
-        .select($"userId", $"k", $"validFromMs", $"validToMs")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSet
-      assert(got === expected)
-      assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
   test("rangeJoin matches a streaming probe against static intervals (stream-static)") {
     import graft.operators.{EventOps, TemporalOps}
     implicit val sqlCtx = spark.sqlContext
@@ -742,37 +372,6 @@ class StreamingSpec extends SparkSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === expected)
       assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("streamingScd2 absorbs out-of-order arrivals inside the watermark horizon") {
-    implicit val sqlCtx = spark.sqlContext
-    def j(k: Long) = s"""{"k": $k}"""
-    val mem = MemoryStream[(Long, Long, Long, String)]
-    val stream = mem.toDF().toDF("user_id", "ms", "event_id", "props")
-      .withColumn("ts", timestamp_millis(col("ms")))
-    val q = StreamOps.streamingScd2(stream, watermark = "10 minutes")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("scd2_ooo").start()
-    try {
-      val m = 60000L
-      // arrivals OUT of event-time order inside one batch: the 5→7
-      // change at t=2min arrives before the t=1min obs of 5
-      mem.addData((1L, 2 * m, 2L, j(7)), (1L, 1 * m, 1L, j(5)))
-      q.processAllAvailable()
-      // a straggler at t=3min (still above watermark), then a sentinel
-      // far ahead to finalize everything
-      mem.addData((1L, 3 * m, 3L, j(5)))
-      q.processAllAvailable()
-      mem.addData((999L, 86400000L, 99L, j(1)))
-      q.processAllAvailable()
-      val got = spark.table("scd2_ooo").where($"userId" === 1L)
-        .select($"k", $"validFromMs", $"validToMs")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-        .sortBy(_._2)
-      // event-time order 5@1m, 7@2m, 5@3m -> closed versions
-      // (5, 1m..2m) and (7, 2m..3m); the open (5, 3m..) stays in state
-      assert(got === Seq((5L, 1 * m, 2 * m), (7L, 2 * m, 3 * m)))
     } finally q.stop()
   }
 
@@ -819,44 +418,6 @@ class StreamingSpec extends SparkSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === expected)
       assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("streamingFunnel advancements reproduce the batch funnel histogram") {
-    import graft.operators.EventOps
-    implicit val sqlCtx = spark.sqlContext
-    val ev = graft.tables.Tables.events(spark, "/root/testdata/sf0.001")
-    val expected = EventOps.funnel(ev)
-      .select($"stage_idx", $"users")
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-
-    val rows = ev
-      .select($"event_id", $"user_id", unix_millis($"ts").as("ms"),
-        $"event_type")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-      .sortBy(t => (t._3, t._1))
-    val tSplit = rows(rows.length / 2)._3
-    val (b1, b2) = rows.partition(_._3 < tSplit)
-    val mem = MemoryStream[(Long, Long, Long, String)]
-    val stream = mem.toDF().toDF("event_id", "user_id", "ms", "event_type")
-      .withColumn("ts", timestamp_millis(col("ms")))
-    val q = StreamOps.streamingFunnel(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("funnel_out").start()
-    try {
-      mem.addData(b1.toIndexedSeq); q.processAllAvailable()
-      mem.addData(b2.toIndexedSeq); q.processAllAvailable()
-      mem.addData((999999L, 999999L, rows.last._3 + 86400000L, "signup"))
-      q.processAllAvailable()
-      val advances = spark.table("funnel_out")
-        .where($"userId" =!= 999999L)
-        .groupBy($"userId").agg(max($"stage").as("k"))
-        .collect().map(r => r.getInt(1))
-      val got = (1 to 4)
-        .map(i => i -> advances.count(_ >= i).toLong).toMap
-      assert(got === expected)
-      assert(got(1) > 0)
     } finally q.stop()
   }
 
@@ -923,39 +484,6 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  /** Replays sf0.001 events through [[StreamOps.streamingTypeNgrams]]
-    * and aggregates the emitted n-grams into the batch matrix. */
-  private def ngramReplayCounts(n: Int, outName: String): Map[Seq[String], Long] = {
-    implicit val sqlCtx = spark.sqlContext
-    val ev = graft.tables.Tables.events(spark, "/root/testdata/sf0.001")
-    val rows = ev
-      .select($"user_id", unix_millis($"ts").as("ms"), $"event_id",
-        $"event_type")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-      .sortBy(t => (t._2, t._3))
-    val tSplit = rows(rows.length / 2)._2
-    val (b1, b2) = rows.partition(_._2 < tSplit)
-    val mem = MemoryStream[(Long, Long, Long, String)]
-    val stream = mem.toDF().toDF("user_id", "ms", "event_id", "event_type")
-      .withColumn("ts", timestamp_millis(col("ms")))
-    val q = StreamOps.streamingTypeNgrams(stream, n)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(outName).start()
-    try {
-      mem.addData(b1.toIndexedSeq); q.processAllAvailable()
-      mem.addData(b2.toIndexedSeq); q.processAllAvailable()
-      // sentinel pushes the watermark past every buffered observation
-      mem.addData((999999L, rows.last._2 + 86400000L, 999999L, "flush"))
-      q.processAllAvailable()
-      spark.table(outName)
-        .where($"userId" =!= 999999L)
-        .collect()
-        .map(r => r.getSeq[String](1))
-        .groupBy(identity).view.mapValues(_.size.toLong).toMap
-    } finally q.stop()
-  }
-
   test("streaming count-min cells equal the batch sketch (complete-mode agg)") {
     import graft.operators.TextOps
     implicit val sqlCtx = spark.sqlContext
@@ -1006,179 +534,6 @@ class StreamingSpec extends SparkSuite {
       assert(got.toSeq == expected.toSeq)
       assert(got.nonEmpty)
     } finally q.stop()
-  }
-
-  test("streamingRollingAnomalies equals the batch q140 flags on a replay") {
-    import graft.operators.EventOps
-    implicit val sqlCtx = spark.sqlContext
-    val ev = graft.tables.Tables.events(spark, "/root/testdata/sf0.001")
-    val expected = EventOps.rollingAnomalies(ev).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5))).toSet
-
-    val rows = ev
-      .select($"user_id", unix_millis($"ts").as("ms"), $"event_id", $"value")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(t => (t._2, t._3))
-    val tSplit = rows(rows.length / 2)._2
-    val (b1, b2) = rows.partition(_._2 < tSplit)
-    val mem = MemoryStream[(Long, Long, Long, Double)]
-    val stream = mem.toDF().toDF("user_id", "ms", "event_id", "value")
-      .withColumn("ts", timestamp_millis(col("ms")))
-    val q = StreamOps.streamingRollingAnomalies(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("rz_out").start()
-    try {
-      mem.addData(b1.toIndexedSeq); q.processAllAvailable()
-      mem.addData(b2.toIndexedSeq); q.processAllAvailable()
-      mem.addData((999999L, rows.last._2 + 86400000L, 999999L, 0.0))
-      q.processAllAvailable()
-      val got = spark.table("rz_out")
-        .where($"userId" =!= 999999L)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5))).toSet
-      assert(got === expected)
-      assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("streamingEwma equals the batch q151 smoothing on a replay") {
-    import graft.operators.EventOps
-    implicit val sqlCtx = spark.sqlContext
-    val ev = graft.tables.Tables.events(spark, "/root/testdata/sf0.001")
-    val expected = EventOps.ewmaSmooth(ev).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4))).toSet
-
-    val rows = ev
-      .select($"user_id", unix_millis($"ts").as("ms"), $"event_id", $"value")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(t => (t._2, t._3))
-    val tSplit = rows(rows.length / 2)._2
-    val (b1, b2) = rows.partition(_._2 < tSplit)
-    val mem = MemoryStream[(Long, Long, Long, Double)]
-    val stream = mem.toDF().toDF("user_id", "ms", "event_id", "value")
-      .withColumn("ts", timestamp_millis(col("ms")))
-    val q = StreamOps.streamingEwma(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ewma_out").start()
-    try {
-      mem.addData(b1.toIndexedSeq); q.processAllAvailable()
-      mem.addData(b2.toIndexedSeq); q.processAllAvailable()
-      mem.addData((999999L, rows.last._2 + 86400000L, 999999L, 0.0))
-      q.processAllAvailable()
-      val got = spark.table("ewma_out")
-        .where($"userId" =!= 999999L)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4))).toSet
-      assert(got === expected)
-      assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("streamingAttribution equals the batch q114 as-of join on a replay") {
-    import graft.operators.TemporalOps
-    implicit val sqlCtx = spark.sqlContext
-    val ev = graft.tables.Tables.events(spark, "/root/testdata/sf0.001")
-    val expected = TemporalOps.lastTouchAttribution(ev).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4))).toSet
-
-    val rows = ev
-      .select($"user_id", unix_millis($"ts").as("ms"), $"event_id",
-        $"event_type")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-      .sortBy(t => (t._2, t._3))
-    val tSplit = rows(rows.length / 2)._2
-    val (b1, b2) = rows.partition(_._2 < tSplit)
-    val mem = MemoryStream[(Long, Long, Long, String)]
-    val stream = mem.toDF().toDF("user_id", "ms", "event_id", "event_type")
-      .withColumn("ts", timestamp_millis(col("ms")))
-    val q = StreamOps.streamingAttribution(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("attr_out").start()
-    try {
-      mem.addData(b1.toIndexedSeq); q.processAllAvailable()
-      mem.addData(b2.toIndexedSeq); q.processAllAvailable()
-      mem.addData((999999L, rows.last._2 + 86400000L, 999999L, "click"))
-      q.processAllAvailable()
-      val got = spark.table("attr_out")
-        .where($"userId" =!= 999999L)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4))).toSet
-      assert(got === expected)
-      assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("streamingTypeNgrams(2) equals the batch transition matrix on a replay") {
-    import graft.operators.EventOps
-    val ev = graft.tables.Tables.events(spark, "/root/testdata/sf0.001")
-    val expected = EventOps.typeTransitions(ev).collect()
-      .map(r => Seq(r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val got = ngramReplayCounts(2, "ngram2_out")
-    assert(got === expected)
-    assert(got.nonEmpty)
-  }
-
-  test("streamingSessionEntryExit equals the batch q128 matrix on a replay") {
-    import graft.operators.EventOps
-    implicit val sqlCtx = spark.sqlContext
-    val ev = graft.tables.Tables.events(spark, "/root/testdata/sf0.001")
-    val expected = EventOps.sessionEntryExit(ev).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        ((r.getLong(2), r.getLong(3)))).toMap
-
-    val rows = ev
-      .select($"user_id", unix_millis($"ts").as("ms"), $"event_id",
-        $"event_type")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-      .sortBy(t => (t._2, t._3))
-    val tSplit = rows(rows.length / 2)._2
-    val (b1, b2) = rows.partition(_._2 < tSplit)
-    val mem = MemoryStream[(Long, Long, Long, String)]
-    val stream = mem.toDF().toDF("user_id", "ms", "event_id", "event_type")
-      .withColumn("ts", timestamp_millis(col("ms")))
-    val q = StreamOps.streamingSessionEntryExit(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ee_out").start()
-    try {
-      mem.addData(b1.toIndexedSeq); q.processAllAvailable()
-      mem.addData(b2.toIndexedSeq); q.processAllAvailable()
-      // sentinel advances the watermark far past every session's
-      // end + gap, so the event-time timers CLOSE every open session —
-      // full matrix equality, not just closed-prefix equality
-      mem.addData((999999L, rows.last._2 + 30L * 86400000L, 999999L, "flush"))
-      q.processAllAvailable()
-      val got = spark.table("ee_out")
-        .where($"userId" =!= 999999L)
-        .groupBy($"entryType", $"exitType")
-        .agg(count(lit(1)).as("n_sessions"),
-          sum(when($"n" === 1L, 1L).otherwise(0L)).as("n_bounces"))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)) ->
-          ((r.getLong(2), r.getLong(3)))).toMap
-      assert(got === expected)
-      assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("streamingTypeNgrams(3) equals the batch trigram counts on a replay") {
-    import graft.operators.EventOps
-    val ev = graft.tables.Tables.events(spark, "/root/testdata/sf0.001")
-    val expected = EventOps.typeTrigrams(ev, k = Int.MaxValue).collect()
-      .map(r => Seq(r.getString(0), r.getString(1), r.getString(2))
-        -> r.getLong(3)).toMap
-    val got = ngramReplayCounts(3, "ngram3_out")
-    assert(got === expected)
-    assert(got.nonEmpty)
   }
 
   test("streaming filterPolicy equals the batch q166 verdict (complete-mode agg)") {
@@ -1249,88 +604,6 @@ class StreamingSpec extends SparkSuite {
       val got = spark.table("div_out").collect().map(_.toString).sorted
       assert(got.toSeq == expected.toSeq)
       assert(got.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join equals the batch join under replay") {
-    implicit val sqlCtx = spark.sqlContext
-    // (event_id, user_id, ts_sec); horizon 30 s, watermark 20 s
-    val clicks = Seq((1L, 7L, 100L), (2L, 7L, 200L), (3L, 8L, 100L),
-      (4L, 9L, 500L))
-    val buys = Seq((11L, 7L, 120L), (12L, 7L, 131L), (13L, 7L, 215L),
-      (14L, 8L, 125L), (15L, 9L, 100L)) // 12 just past horizon; 15 precedes
-    def frame(rows: Seq[(Long, Long, Long)]) =
-      rows.toDF("event_id", "user_id", "ts_sec")
-        .withColumn("ts", timestamp_seconds(col("ts_sec")))
-    val expected = StreamOps.streamingIntervalJoin(
-        frame(clicks), frame(buys), horizon = "30 seconds",
-        watermark = "20 seconds")
-      .select($"l_id", $"r_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-      .toSet
-    // sanity: the batch form matches the hand-derived pairs
-    assert(expected === Set((1L, 11L), (2L, 13L), (3L, 14L)))
-
-    val memL = MemoryStream[(Long, Long, Long)]
-    val memR = MemoryStream[(Long, Long, Long)]
-    def sframe(m: MemoryStream[(Long, Long, Long)]) =
-      m.toDF().toDF("event_id", "user_id", "ts_sec")
-        .withColumn("ts", timestamp_seconds(col("ts_sec")))
-    val joined = StreamOps.streamingIntervalJoin(
-      sframe(memL), sframe(memR), horizon = "30 seconds",
-      watermark = "20 seconds")
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName("ssj_out").start()
-    try {
-      // out-of-order across batches: right events for user 7 land a
-      // batch BEFORE and a batch AFTER their matching left events
-      memR.addData((11L, 7L, 120L)); q.processAllAvailable()
-      memL.addData(clicks.take(3).toIndexedSeq); q.processAllAvailable()
-      memR.addData((12L, 7L, 131L), (13L, 7L, 215L), (14L, 8L, 125L))
-      q.processAllAvailable()
-      memL.addData((4L, 9L, 500L)); memR.addData((15L, 9L, 100L))
-      q.processAllAvailable()
-      val got = spark.table("ssj_out").select($"l_id", $"r_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got === expected)
-    } finally q.stop()
-  }
-
-  test("streaming hourly percentiles equal the batch q205 rollup on closed hours") {
-    import graft.operators.EventOps
-    implicit val sqlCtx = spark.sqlContext
-    // (event_id, ts_sec, value): two hours of data + a far-future
-    // sentinel that advances the watermark past both hour ends
-    val h = 3600L
-    val rows = Seq(
-      (1L, 10L, 1.07), (2L, 600L, 0.55), (3L, 3599L, 2.31),
-      (4L, h + 5L, 9.99), (5L, h + 100L, 0.01), (6L, 20L, 0.55))
-    val sentinel = (99L, 10 * h, 1.0)
-    def frame(df: org.apache.spark.sql.DataFrame) = df
-      .withColumn("ts", timestamp_seconds(col("ts_sec")))
-      .withColumn("user_id", lit(1L)).withColumn("event_type", lit("view"))
-      .withColumn("props", lit("{}"))
-    val all = frame((rows :+ sentinel).toDF("event_id", "ts_sec", "value"))
-    val expected = EventOps.hourlyPercentiles(all)
-      .collect().map(_.toString).filterNot(_.startsWith("[10,")).sorted
-
-    val mem = MemoryStream[(Long, Long, Double)]
-    val out = graft.streaming.StreamOps.streamingHourlyPercentiles(
-      frame(mem.toDF().toDF("event_id", "ts_sec", "value")),
-      watermark = "2 hours") // wider than the replay's max disorder
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("shp_out").start()
-    try {
-      // out-of-order within and across hours
-      mem.addData(rows(0), rows(3)); q.processAllAvailable()
-      mem.addData(rows(1), rows(4), rows(2)); q.processAllAvailable()
-      mem.addData(rows(5)); q.processAllAvailable()
-      mem.addData(sentinel); q.processAllAvailable()
-      mem.addData((100L, 11 * h, 1.0)); q.processAllAvailable() // fire timers
-      val got = spark.table("shp_out")
-        .select($"hr", $"nEvents".as("n_events"), $"p50", $"p90", $"p99")
-        .collect().map(_.toString).sorted
-      assert(got.toSeq === expected.toSeq)
-      assert(got.length === 2)
     } finally q.stop()
   }
 
