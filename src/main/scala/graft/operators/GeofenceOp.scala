@@ -58,14 +58,14 @@ object GeofenceOp {
 
   /** Geofence against an explicit fence frame (hot-reloaded or fixture).
     * The predicate is the codegen'd [[PointInPolygonExpr]] (identical
-    * arithmetic to the UDF tier, asserted in GeoSpec).
+    * arithmetic to the UDF tier, asserted in GeoSpec). Unordered: a sort
+    * costs each micro-batch a sampling job and a shuffle no sink needs.
     */
   def geofenceWith(points: DataFrame, fencesFrame: DataFrame): DataFrame =
     points.crossJoin(broadcast(fencesFrame))
       .where(graft.functions.PointInPolygonExpr.column(
         col("lat"), col("lng"), col("lats"), col("lngs")))
       .select(col("id"), col("fence_name"))
-      .orderBy("id", "fence_name")
 
   /** Deterministic synthetic points inside the Belgium bounding box,
     * derived from customer keys by pure integer/double arithmetic
@@ -78,10 +78,11 @@ object GeofenceOp {
       (lit(3.32) + (((col("c_custkey") * lit(40503L)) % 1000L) / lit(1000.0)) * lit(2.38)).as("lng"))
 
   /** points(id, lat, lng) × fences → (id, fence_name) for contained
-    * points, against the built-in fixture fences.
+    * points against the built-in fixture fences, ordered by (id, fence_name).
     */
   def geofence(points: DataFrame): DataFrame =
     geofenceWith(points, fencesDf(points.sparkSession))
+      .orderBy("id", "fence_name")
 
   /** Radius self-join with GRID-CELL blocking — "which point pairs are
     * within r of each other", the proximity join the broadcast-NL

@@ -2127,8 +2127,7 @@ object SimilarityOp {
                      centerIds: Seq[Long] = Seq(7L, 42L, 123L),
                      nSub: Int = 8,
                      warehouse: String = "/tmp/graft_warehouse",
-                     inputTag: Option[String] = None,
-                     sigLayout: Boolean = true): DataFrame = {
+                     inputTag: Option[String] = None): DataFrame = {
     // Scan-sharing via in-memory persist A/B'd a THIRD time (round 9,
     // RunOne x4 steady): persisting the shared qframe+exact ground
     // truth measured 5.8 s vs 5.6 s recomputed — the 9 arms' redundant
@@ -2149,12 +2148,8 @@ object SimilarityOp {
     // write-once signature layout with a pushed band filter instead of
     // re-sketching the corpus per arm; the legacy arm's weight family
     // differs and computes live (r14, the sharedExactGT precedent).
-    // `sigLayout = false` forces all-live for the Prof85 A/B.
-    val lshArms = SweepLsh.map { c =>
-      c.name -> (if (sigLayout)
-        lshCandidatesMaybeServed(embeddings, qmod, c, warehouse, inputTag)
-      else lshCandidatesMulti(embeddings, qmod, c))
-    }
+    val lshArms = SweepLsh.map(c =>
+      c.name -> lshCandidatesMaybeServed(embeddings, qmod, c, warehouse, inputTag))
     val pqArms = SweepPq.map { case (name, p, s) =>
       name -> pqShortlistMulti(embeddings, qmod, centers, p,
         codebook, nSub, s)

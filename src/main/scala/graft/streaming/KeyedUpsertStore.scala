@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Last-write-wins keyed store backed by parquet — the engine's stand-in
   * for the reference's Cassandra `attach_event` table (S4/W5:
@@ -13,13 +14,16 @@ import org.apache.spark.sql.functions._
   * runs against Delta/Iceberg MERGE; this keeps the semantics with zero
   * extra dependencies.
   *
-  * Scale design — two properties a 100 TB store needs:
+  * Scale design — what a 100 TB store needs:
   *
-  *  - '''Bucketed writes''': rows hash into `numBuckets` buckets by key
-  *    (`pmod(hash(key), numBuckets)`), and an upsert rewrites ONLY the
-  *    buckets its batch touches — cost is O(touched buckets), not
-  *    O(store). Untouched buckets' files are not read, rewritten, or
-  *    moved (byte-identity asserted in PipelineSpec).
+  *  - '''Bucketed, one-pass upserts''': rows hash into `numBuckets`
+  *    buckets by key (`pmod(hash(key), numBuckets)`). An upsert reads the
+  *    live versions of ONLY the buckets its batch touches in one scan,
+  *    dedupes once and writes them in one partitioned write: reads and
+  *    writes are O(touched buckets), not O(store), and the Spark job
+  *    count is fixed however many buckets it touches. Untouched buckets'
+  *    files are not read, rewritten, or moved (job count and
+  *    byte-identity asserted in PipelineSpec).
   *  - '''Snapshot reads via a manifest''': the set of live bucket
   *    directories is recorded in a manifest file that is swapped with
   *    one ATOMIC_MOVE — the miniature form of a table format's
@@ -28,15 +32,19 @@ import org.apache.spark.sql.functions._
   *    half-finished multi-bucket swap (the naive move-directories
   *    scheme has a window where a bucket dir is simply absent — a
   *    SILENT missing-rows read). Superseded bucket versions are kept
-  *    for one generation and vacuumed on the following upsert, so a
-  *    reader holding the previous manifest stays consistent through
-  *    one concurrent upsert (the Delta/Iceberg retention idea, scaled
-  *    to the single-writer driver-owned case).
+  *    for one generation and vacuumed by the next upsert touching the
+  *    bucket (the Delta/Iceberg retention idea, scaled to the
+  *    single-writer driver-owned case). So a frame from [[current]]
+  *    keeps reading its snapshot through ONE concurrent upsert, not two.
   */
 class KeyedUpsertStore(spark: SparkSession, path: String,
                        key: String, tsCol: String, numBuckets: Int = 16) {
 
   private def manifestPath: Path = Paths.get(path, "manifest.json")
+
+  /** Stored schema, from the first write or the footers once per
+    * instance: no read pays Spark's schema-inference job. */
+  @volatile private var schema: Option[StructType] = None
 
   /** manifest = bucket index → live dir name (e.g. "b3_v7"). */
   private def readManifest(): Map[Int, String] =
@@ -64,19 +72,21 @@ class KeyedUpsertStore(spark: SparkSession, path: String,
 
   private def versionOf(dir: String): Long = dir.drop(dir.indexOf("_v") + 2).toLong
 
-  /** Live-looking bucket dirs on disk (staging dirs excluded) — used only
-    * by the lost-manifest guard in `upsert`.
-    */
-  private def bucketDirs: Seq[Path] = {
-    val root = Paths.get(path)
-    if (!Files.exists(root)) Nil
+  /** Live-looking bucket dirs on disk (staging dirs excluded), for the
+    * lost-manifest guard in `upsert`. */
+  private def bucketDirs: Seq[Path] =
+    if (!Files.exists(Paths.get(path))) Nil
     else {
       import scala.jdk.CollectionConverters._
-      val s = Files.list(root)
-      try s.iterator.asScala
-        .filter(p => p.getFileName.toString.matches("b\\d+_v\\d+")).toSeq
+      val s = Files.list(Paths.get(path))
+      try s.iterator.asScala.filter(_.getFileName.toString.matches("b\\d+_v\\d+")).toSeq
       finally s.close()
     }
+
+  private def read(dirs: Seq[String]): DataFrame = {
+    val paths = dirs.map(d => s"$path/$d")
+    if (schema.isEmpty) schema = Some(spark.read.parquet(paths: _*).schema)
+    spark.read.schema(schema.get).parquet(paths: _*)
   }
 
   /** Current store contents as of the manifest snapshot (empty-schema-
@@ -84,66 +94,62 @@ class KeyedUpsertStore(spark: SparkSession, path: String,
     */
   def current: Option[DataFrame] = {
     val m = readManifest()
-    if (m.isEmpty) None
-    else Some(spark.read.parquet(
-      m.values.toSeq.sorted.map(d => s"$path/$d"): _*))
+    if (m.isEmpty) None else Some(read(m.values.toSeq.sorted))
   }
 
-  /** Merge a batch: per touched bucket, union with that bucket's live
-    * rows, keep latest per key, write a NEW versioned dir; then one
-    * atomic manifest swap publishes all touched buckets at once.
-    * Untouched buckets are not read, rewritten, or moved. The previous
-    * version of each touched bucket survives until the NEXT upsert
-    * touching it (one-generation retention for in-flight readers).
-    */
+  /** Merge a batch: each touched bucket gets a NEW versioned dir, and one
+    * atomic manifest swap publishes them all at once. */
   def upsert(batch: DataFrame): Unit = {
-    val bucketed = batch
-      .withColumn("__b", pmod(hash(col(key)), lit(numBuckets)))
-      .persist()
+    val bucketOf = pmod(hash(col(key)), lit(numBuckets))
+    val bucketed = batch.withColumn("__b", bucketOf).persist()
     try {
-      val touched = bucketed.select(col("__b")).distinct()
-        .collect().map(_.getInt(0)).sorted
+      // a set per partition, no shuffle: the same job count for a
+      // one-partition batch as for any other
+      val touched = bucketed.select(col("__b")).rdd
+        .mapPartitions(rows => rows.map(_.getInt(0)).toSet.iterator)
+        .collect().distinct.sorted
       if (touched.isEmpty) return
       Files.createDirectories(Paths.get(path))
       val manifest = readManifest()
       // Fail loud rather than clobber: bucket dirs with NO manifest mean
-      // the manifest was lost or deleted — an empty map would make every
-      // live dir look like an orphan and the writes below would destroy
-      // real data silently.
+      // the manifest was lost — an empty map would make every live dir
+      // look like an orphan, and the writes below would destroy it.
       if (manifest.isEmpty && bucketDirs.nonEmpty)
         throw new IllegalStateException(
           s"KeyedUpsertStore at $path has bucket dirs but no readable " +
             "manifest.json — refusing to upsert over possibly-live data; " +
             "restore or remove the store directory")
+      val live = touched.toSeq.flatMap(manifest.get)
+      val merged = if (live.isEmpty) bucketed
+        else read(live).withColumn("__b", bucketOf).unionByName(bucketed)
+      // One shuffle by key serves the dedupe and the write: it partitions
+      // by pmod(murmur3(key), spark.sql.shuffle.partitions), so when that
+      // count divides numBuckets a bucket stays in one task (AQE merges
+      // only whole partitions) and is written as one file, by few tasks.
+      val deduped = StreamOps.latestByKey(merged.repartition(col(key)), key, tsCol)
+      // a dot-prefixed staging dir holds each touched bucket as `__b=<b>`;
+      // one atomic rename per bucket makes its version dir appear
+      // fully-formed or not at all
+      val staging = Paths.get(path, ".stage_upsert")
+      deduped.write.mode("overwrite").partitionBy("__b").parquet(staging.toString)
+      if (schema.isEmpty) schema = Some(batch.schema)
       val updates = touched.map { b =>
-        val slice = bucketed.where(col("__b") === b).drop("__b")
-        val live = manifest.get(b)
-        val merged = live match {
-          case Some(dir) => spark.read.parquet(s"$path/$dir").unionByName(slice)
-          case None      => slice
-        }
-        val deduped = StreamOps.latestByKey(merged, key, tsCol)
-        val newDir = s"b${b}_v${live.map(versionOf).getOrElse(0L) + 1L}"
-        // write to a dot-prefixed staging dir, then one atomic rename —
-        // the dir appears fully-formed or not at all. A pre-existing
-        // `newDir` can only be an orphan of a crashed/failed upsert
-        // (the manifest never referenced it, since the manifest still
-        // names the PREVIOUS version) — clobber it, or the store would
-        // wedge on FileAlreadyExists forever after one mid-loop failure.
-        val staging = Paths.get(path, s".stage_$newDir")
-        deleteRecursive(staging)
+        val newDir = s"b${b}_v${manifest.get(b).map(versionOf).getOrElse(0L) + 1L}"
+        // A pre-existing `newDir` can only be an orphan of a crashed or
+        // failed upsert (the manifest still names the PREVIOUS version) —
+        // clobber it, or the store would wedge on FileAlreadyExists.
         deleteRecursive(Paths.get(path, newDir))
-        deduped.write.mode("overwrite").parquet(staging.toString)
-        Files.move(staging, Paths.get(path, newDir), StandardCopyOption.ATOMIC_MOVE)
+        Files.move(staging.resolve(s"__b=$b"), Paths.get(path, newDir),
+          StandardCopyOption.ATOMIC_MOVE)
         b -> newDir
       }
+      deleteRecursive(staging)
       // single ATOMIC_MOVE publishes every touched bucket at once
       writeManifest(manifest ++ updates)
-      // vacuum exactly the newly superseded generation (vNew−2): O(1)
-      // per touched bucket — earlier versions were vacuumed by earlier
-      // upserts, so rescanning from v1 would be O(stream lifetime)
-      touched.foreach { b =>
-        val vNew = versionOf((manifest ++ updates)(b))
+      // vacuum exactly the newly superseded generation (vNew−2): O(1) per
+      // bucket; earlier upserts vacuumed the older ones
+      updates.foreach { case (b, newDir) =>
+        val vNew = versionOf(newDir)
         if (vNew >= 3L) deleteRecursive(Paths.get(path, s"b${b}_v${vNew - 2L}"))
       }
     } finally bucketed.unpersist()

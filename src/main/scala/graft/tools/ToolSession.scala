@@ -39,11 +39,8 @@ object ToolSession {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // SPARK_GRAFT_UI=1 flips the UI on for REST-API stage
-      // introspection (the r14 parallelism-audit path); default off so
-      // bench readings never pay UI bookkeeping
-      .config("spark.ui.enabled", sys.env.getOrElse("SPARK_GRAFT_UI", "false"))
-      .config("spark.ui.port", sys.env.getOrElse("SPARK_GRAFT_UI_PORT", "4050"))
+      // off: bench readings never pay UI bookkeeping
+      .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "8000")
       .config("spark.sql.ui.retainedExecutions", "15")
       .config("spark.ui.retainedJobs", "50")

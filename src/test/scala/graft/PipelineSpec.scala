@@ -304,6 +304,58 @@ class PipelineSpec extends SparkSuite {
     assert(!java.nio.file.Files.exists(orphan.resolve("junk")))
   }
 
+  test("an upsert's Spark job count does not grow with the buckets it touches") {
+    import org.apache.spark.graft.JobCounter
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    val store = new KeyedUpsertStore(spark, s"$dir/attach", "bearerId", "ts")
+    def batch(version: Int, ts: Long) =
+      (1 to 200).map(i => attach(s"b$i", i + version, ts)).toDF()
+    assert(batch(0, 0L).select(pmod(hash($"bearerId"), lit(16)))
+      .distinct().count() === 16)
+    store.upsert(batch(0, 1000L))
+    val oneBucket = JobCounter.count(spark.sparkContext)(
+      store.upsert(Seq(attach("b1", 7, 2000L)).toDF()))
+    val allBuckets = JobCounter.count(spark.sparkContext)(
+      store.upsert(batch(1000, 3000L)))
+    assert(oneBucket === allBuckets,
+      s"1 bucket ran $oneBucket jobs, 16 buckets ran $allBuckets")
+    assert(allBuckets <= 6, s"$allBuckets jobs per upsert")
+    val cur = store.current.get
+    assert(cur.count() === 200)
+    assert(cur.where($"bearerId" === "b1").select($"subscriber.id")
+      .as[Int].head() === 1001)
+    // each bucket version is written as one file
+    val root = java.nio.file.Paths.get(s"$dir/attach")
+    import scala.jdk.CollectionConverters._
+    val versions = java.nio.file.Files.list(root).iterator().asScala
+      .filter(_.getFileName.toString.matches("b\\d+_v\\d+")).toSeq
+    assert(versions.size === 32) // two retained versions per bucket
+    versions.foreach { v =>
+      val parts = java.nio.file.Files.list(v).iterator().asScala
+        .count(_.getFileName.toString.endsWith(".parquet"))
+      assert(parts === 1, s"$v holds $parts parquet files")
+    }
+    // the schema taken from the first write is the one the footers give
+    assert(new KeyedUpsertStore(spark, s"$dir/attach", "bearerId", "ts")
+      .current.get.schema === cur.schema)
+  }
+
+  test("a frame from current keeps reading its snapshot through one upsert " +
+       "to the same buckets") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-snap").toString
+    val store = new KeyedUpsertStore(spark, s"$dir/attach", "bearerId", "ts")
+    store.upsert((1 to 40).map(i => attach(s"b$i", i, 1000L)).toDF())
+    val snapshot = store.current.get
+    def rows(df: DataFrame) = df.select($"bearerId", $"subscriber.id")
+      .as[(String, Int)].collect().toSet
+    val before = (1 to 40).map(i => s"b$i" -> i).toSet
+    assert(rows(snapshot) === before)
+    // the same keys again: every bucket of the snapshot is superseded
+    store.upsert((1 to 40).map(i => attach(s"b$i", i + 100, 2000L)).toDF())
+    assert(rows(snapshot) === before)
+    assert(rows(store.current.get) === (1 to 40).map(i => s"b$i" -> (i + 100)).toSet)
+  }
+
   test("processBatch persists the shared enrichment prefix; release() drops it (S8)") {
     val attachDf = Seq(attach("b1", 1, 1000L)).toDF()
     val ctDf = Seq(ct("b1", 10000L, 10.0, 0.1), ct("b1", 12000L, 12.0, 0.2)).toDF()
