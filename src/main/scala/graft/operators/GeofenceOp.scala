@@ -41,6 +41,13 @@ object GeofenceOp {
     * a driver timer (`Geofencer.scala:18-23`); the Structured Streaming
     * analog is re-reading inside `foreachBatch` — this reader is that
     * per-batch call.
+    *
+    * A half-written file must not read as "no fences" (every point would
+    * silently miss every fence for that batch): an empty file fails
+    * here, and a line that does not parse fails the job that reads the
+    * fences, both naming `path`. A file holding `[]` is no fences. The
+    * checks are a file-size lookup and an expression inside the fence
+    * scan, so they add no Spark job.
     */
   def fencesFromJson(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.types._
@@ -49,8 +56,13 @@ object GeofenceOp {
       StructField("path", StringType),
       StructField("polygon", ArrayType(StructType(Seq(
         StructField("lat", DoubleType), StructField("lng", DoubleType))))))))
+    val file = new org.apache.hadoop.fs.Path(path)
+    require(file.getFileSystem(spark.sessionState.newHadoopConf())
+      .getContentSummary(file).getLength > 0, s"fence file $path is empty")
+    val parsed = coalesce(from_json(col("value"), schema), raise_error(
+      lit(s"fence file $path: a line is not a JSON array of fences (truncated?)")))
     spark.read.text(path)
-      .select(explode(from_json(col("value"), schema)).as("f"))
+      .select(explode(parsed).as("f"))
       .select(col("f.name").as("fence_name"),
         expr("transform(f.polygon, p -> p.lat)").as("lats"),
         expr("transform(f.polygon, p -> p.lng)").as("lngs"))

@@ -116,7 +116,8 @@ object TelcoPipelines {
             celltowerStream: DataFrame,
             sink: (Outputs, Long) => Unit): (Seq[StreamingQuery], IncrementalKMeans) = {
     val store = new KeyedUpsertStore(attachStream.sparkSession,
-      config.storePath, "bearerId", "ts")
+      config.storePath, "bearerId", "ts", plainColumns =
+        Seq("subscriber.imsi", "subscriber.msisdn", "subscriber.imei"))
     val km = config.newKMeans()
     // W4/W6 full-topology restart: when checkpointing is on, the
     // evolving model state rides the same checkpoint dir as the query

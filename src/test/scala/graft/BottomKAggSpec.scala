@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{BottomKAgg, SampleRow}
 
 /** The sketch contract of [[BottomKAgg]]: bottom-k of a union equals
@@ -9,7 +8,7 @@ import graft.functions.{BottomKAgg, SampleRow}
   * order-insensitive. Pure Scala: the Spark-side identity with the SQL
   * window derivation is the q158 oracle gate.
   */
-class BottomKAggSpec extends AnyFunSuite {
+class BottomKAggSpec extends SparkSuite {
   private def ref(rows: Seq[SampleRow], k: Int): Seq[SampleRow] =
     rows.sortBy(r => (r.hx, r.id)).take(k)
 
@@ -76,10 +75,6 @@ class BottomKAggSpec extends AnyFunSuite {
 
   test("native BottomKExpr equals the Aggregator form on Spark, " +
       "across forced multi-partition merges, both key modes") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
     import org.apache.spark.sql.functions.{col, udaf}
     import spark.implicits._
     for (seed <- 1L to 3L; k <- Seq(1, 8, 100); distinct <- Seq(false, true)) {
@@ -103,10 +98,6 @@ class BottomKAggSpec extends AnyFunSuite {
 
   test("BottomKExpr tolerates narrower input types via implicit casts " +
       "(int keys/ids, float values) — the Aggregator-form contract") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     // INT hx/id and FLOAT v: before inputTypes was declared this threw

@@ -278,6 +278,30 @@ class DedupAndTextSpec extends SparkSuite {
     assert(hits.map(_.getLong(0)).toSeq === Seq(1L)) // inside the square
   }
 
+  test("a truncated or empty fence file fails loudly, naming the file; " +
+      "[] is no fences") {
+    import graft.operators.GeofenceOp
+    val dir = java.nio.file.Files.createTempDirectory("fences")
+    def file(name: String, body: String) = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.writeString(f, body)
+      f.toString
+    }
+    val pts = Seq((1L, 50.5, 4.5)).toDF("id", "lat", "lng")
+    val truncated = file("truncated.json",
+      """[{"name":"f0","path":"x","polygon":[{"lat":50.0,"lng":4.0},{"lat":51""")
+    val err = intercept[Exception](
+      GeofenceOp.geofenceWith(pts, GeofenceOp.fencesFromJson(spark, truncated)).collect())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage).exists(_.contains(truncated))))
+    val empty = file("empty.json", "")
+    val emptyErr = intercept[IllegalArgumentException](
+      GeofenceOp.fencesFromJson(spark, empty))
+    assert(emptyErr.getMessage.contains(empty))
+    val none = GeofenceOp.fencesFromJson(spark, file("none.json", "[]"))
+    assert(GeofenceOp.geofenceWith(pts, none).count() === 0)
+  }
+
   test("custom expressions are SQL-callable after registration") {
     graft.GraftFunctions.register(spark)
     val h = spark.sql("SELECT portable_hash('alpha') AS h").as[Long].head()

@@ -2,13 +2,12 @@ package graft
 
 import graft.functions.GeoFunctions
 import graft.operators.GeofenceOp
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Point-in-polygon semantics, validated against an independent winding
   * -number implementation (different algorithm, same answer off-boundary)
   * plus fixed probes on the 5 reference fences (FIXTURES.md §B).
   */
-class GeoSpec extends AnyFunSuite {
+class GeoSpec extends SparkSuite {
 
   /** Independent oracle: winding number via signed angles. */
   private def windingInside(lat: Double, lng: Double,
@@ -46,8 +45,6 @@ class GeoSpec extends AnyFunSuite {
   }
 
   test("codegen PointInPolygonExpr equals the UDF tier on a probe grid") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val pts = (for (i <- 0 until 40; j <- 0 until 40)

@@ -727,4 +727,47 @@ class PipelineSpec extends SparkSuite {
     assert(restarted.filter(r => r._1 == 40L && r._2 == "rtt")
       .map(_._3) === Seq(2L))
   }
+
+  test("a broadcast relation of a 10k-row string-keyed store is a few MB, " +
+      "not a whole default-size Tungsten page") {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.functions.broadcast
+    val store = (0 until 10000).map(i => attach(f"bearer$i%05d", i, i.toLong)).toDS()
+    val probe = Seq(ct("bearer00042", 1L, 10.0, 0.1)).toDS()
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val joined = probe.join(broadcast(store.select("bearerId", "subscriber")), "bearerId")
+      val exchange = joined.queryExecution.executedPlan.collectFirst {
+        case b: BroadcastExchangeExec => b
+      }.get
+      // the relation the join builds, sized as Spark sizes it for the
+      // broadcast (its pages, not its rows)
+      val relation = exchange.executeBroadcast[AnyRef]().value
+      val bytes = org.apache.spark.util.SizeEstimator.estimate(relation)
+      assert(bytes < 4L * 1024 * 1024, s"broadcast relation is $bytes bytes")
+      assert(joined.select("subscriber.id").as[Int].collect().toSeq === Seq(42))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  test("records larger than a Tungsten page aggregate and sort correctly") {
+    // one group of 50,000 doubles: its collect_list buffer (~400 KB) is
+    // one record larger than a 256 KB page in the partial aggregate's
+    // shuffle write
+    val values = (0 until 50000).map(i => ((i * 7919L) % 50000L).toDouble)
+    val th = graft.operators.OutlierOp.thresholds(
+      spark.range(0, 50000, 1, 1).select(lit(1).as("g"),
+        ((col("id") * 7919L) % 50000L).cast("double").as("v")), "g", "v")
+      .select("n", "lo", "hi").as[(Long, Double, Double)].collect().toSeq
+    val sorted = values.sorted
+    val (q1, q3) = (sorted(50000 / 4), sorted(50000 / 4 * 3))
+    assert(th === Seq((50000L, q1 - (q3 - q1) * 1.5, q3 + (q3 - q1) * 1.5)))
+
+    // ~300 KB strings through latestByKey's shuffle and window sort
+    val rows = for (k <- Seq("a", "b", "c"); ts <- 1L to 2L)
+      yield (k, ts, s"$k$ts" + "x" * 300000)
+    val latest = StreamOps.latestByKey(rows.toDF("k", "ts", "payload"), "k", "ts")
+      .as[(String, Long, String)].collect().sortBy(_._1).toSeq
+    assert(latest === rows.groupBy(_._1).values.map(_.maxBy(_._2)).toSeq.sortBy(_._1))
+  }
 }

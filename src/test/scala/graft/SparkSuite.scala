@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM, one session). */
+/** Shared local session for all suites (one JVM, one session). The
+  * Tungsten page size is production's ([[graft.tools.ToolSession]]). */
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -13,5 +14,6 @@ trait SparkSuite extends AnyFunSuite {
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-wh").toString)
     .config("spark.ui.enabled", "false")
+    .config("spark.buffer.pageSize", graft.tools.ToolSession.PageSize)
     .getOrCreate()
 }
