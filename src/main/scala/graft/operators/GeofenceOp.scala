@@ -44,10 +44,15 @@ object GeofenceOp {
     *
     * A half-written file must not read as "no fences" (every point would
     * silently miss every fence for that batch): an empty file fails
-    * here, and a line that does not parse fails the job that reads the
-    * fences, both naming `path`. A file holding `[]` is no fences. The
-    * checks are a file-size lookup and an expression inside the fence
-    * scan, so they add no Spark job.
+    * here, and a non-blank line that does not parse fails the job that
+    * reads the fences, both naming `path`. Blank lines are skipped; a
+    * file holding `[]` is no fences. The checks are a file-size lookup
+    * and expressions inside the fence scan, so they add no Spark job.
+    * Inside [[graft.streaming.TelcoPipelines.start]] either failure
+    * stops the fan-out query (nothing restarts it); restarted against
+    * its checkpoint, the query replays the failed batch. So a writer
+    * must replace the file atomically: write a temporary file, then
+    * rename it over `path`.
     */
   def fencesFromJson(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.types._
@@ -62,6 +67,7 @@ object GeofenceOp {
     val parsed = coalesce(from_json(col("value"), schema), raise_error(
       lit(s"fence file $path: a line is not a JSON array of fences (truncated?)")))
     spark.read.text(path)
+      .where(trim(col("value")) =!= "")
       .select(explode(parsed).as("f"))
       .select(col("f.name").as("fence_name"),
         expr("transform(f.polygon, p -> p.lat)").as("lats"),

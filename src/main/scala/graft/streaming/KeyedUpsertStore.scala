@@ -36,15 +36,9 @@ import org.apache.spark.sql.types.StructType
   *    bucket (the Delta/Iceberg retention idea, scaled to the
   *    single-writer driver-owned case). So a frame from [[current]]
   *    keeps reading its snapshot through ONE concurrent upsert, not two.
-  *
-  * The key (unique per row) and `plainColumns` (near-unique leaf columns,
-  * dotted paths) are written without parquet dictionary encoding: a
-  * dictionary over unique values only fills up and falls back to plain
-  * encoding, work thrown away on every upsert.
   */
 class KeyedUpsertStore(spark: SparkSession, path: String,
-                       key: String, tsCol: String, numBuckets: Int = 16,
-                       plainColumns: Seq[String] = Nil) {
+                       key: String, tsCol: String, numBuckets: Int = 16) {
 
   private def manifestPath: Path = Paths.get(path, "manifest.json")
 
@@ -137,9 +131,7 @@ class KeyedUpsertStore(spark: SparkSession, path: String,
       // one atomic rename per bucket makes its version dir appear
       // fully-formed or not at all
       val staging = Paths.get(path, ".stage_upsert")
-      deduped.write.mode("overwrite").partitionBy("__b")
-        .options((key +: plainColumns).map(c => s"parquet.enable.dictionary#$c" -> "false").toMap)
-        .parquet(staging.toString)
+      deduped.write.mode("overwrite").partitionBy("__b").parquet(staging.toString)
       if (schema.isEmpty) schema = Some(batch.schema)
       val updates = touched.map { b =>
         val newDir = s"b${b}_v${manifest.get(b).map(versionOf).getOrElse(0L) + 1L}"

@@ -62,6 +62,10 @@ object TelcoPipelines {
                    config: PipelineConfig = PipelineConfig(),
                    train: Boolean = true): Outputs = {
     val spark = celltower.sparkSession
+    // S6: a configured fence file is re-read per batch (hot reload); read
+    // before `enriched` is persisted, so an empty file leaks no cache
+    val fences = config.geofenceFile
+      .fold(GeofenceOp.fencesDf(spark))(GeofenceOp.fencesFromJson(spark, _))
     val enriched = (attachStore match {
       case Some(store) =>
         StreamOps.enrich(celltower,
@@ -82,9 +86,7 @@ object TelcoPipelines {
       col("bearerId").as("id"),
       col("celltower.location.lat").as("lat"),
       col("celltower.location.lng").as("lng"))
-    // S6: a configured fence file is re-read per batch (hot reload)
-    val geofenceHits = GeofenceOp.geofenceWith(points, config.geofenceFile
-      .fold(GeofenceOp.fencesDf(spark))(GeofenceOp.fencesFromJson(spark, _)))
+    val geofenceHits = GeofenceOp.geofenceWith(points, fences)
 
     val dims = config.kmeansDimensions
     val vectored = enriched
@@ -116,8 +118,7 @@ object TelcoPipelines {
             celltowerStream: DataFrame,
             sink: (Outputs, Long) => Unit): (Seq[StreamingQuery], IncrementalKMeans) = {
     val store = new KeyedUpsertStore(attachStream.sparkSession,
-      config.storePath, "bearerId", "ts", plainColumns =
-        Seq("subscriber.imsi", "subscriber.msisdn", "subscriber.imei"))
+      config.storePath, "bearerId", "ts")
     val km = config.newKMeans()
     // W4/W6 full-topology restart: when checkpointing is on, the
     // evolving model state rides the same checkpoint dir as the query

@@ -300,6 +300,12 @@ class DedupAndTextSpec extends SparkSuite {
     assert(emptyErr.getMessage.contains(empty))
     val none = GeofenceOp.fencesFromJson(spark, file("none.json", "[]"))
     assert(GeofenceOp.geofenceWith(pts, none).count() === 0)
+    // a trailing blank line is not a truncation
+    val blankTail = GeofenceOp.fencesFromJson(spark, file("blank_tail.json",
+      """[{"name":"f0","path":"x","polygon":[{"lat":50.0,"lng":4.0},""" +
+        """{"lat":51.0,"lng":4.0},{"lat":51.0,"lng":5.0},{"lat":50.0,"lng":5.0}]}]""" +
+        "\n\n"))
+    assert(GeofenceOp.geofenceWith(pts, blankTail).count() === 1)
   }
 
   test("custom expressions are SQL-callable after registration") {

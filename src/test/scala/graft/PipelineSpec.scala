@@ -484,6 +484,33 @@ class PipelineSpec extends SparkSuite {
     } finally queries.foreach(_.stop())
   }
 
+  test("an empty fence file stops the fan-out query, naming the file, " +
+      "and leaves no batch frame cached") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-bad-fence")
+    val fenceFile = dir.resolve("fences.json")
+    java.nio.file.Files.write(fenceFile, Array.emptyByteArray) // a half-done rewrite
+    val config = streaming.PipelineConfig(storePath = s"$dir/attach",
+      kmeansK = 2, batchMillis = 0L, geofenceFile = Some(fenceFile.toString))
+    val attachMem = MemoryStream[AttachEvent]
+    val ctMem = MemoryStream[CelltowerEvent]
+    val (queries, _) = TelcoPipelines.start(config, attachMem.toDF(), ctMem.toDF(),
+      (_, _) => ())
+    val Seq(attachQ, fanoutQ) = queries
+    try {
+      attachMem.addData(attach("b1", 1, 1000L))
+      attachQ.processAllAvailable()
+      spark.catalog.clearCache() // frames earlier tests left persisted
+      ctMem.addData(ct("b1", 10000L, 10.0, 0.1))
+      val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        fanoutQ.processAllAvailable())
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => Option(e.getMessage).exists(_.contains(fenceFile.toString))))
+      assert(!fanoutQ.isActive && attachQ.isActive)
+      assert(spark.sharedState.cacheManager.isEmpty)
+    } finally queries.foreach(_.stop())
+  }
+
   test("gatherJson collapses a frame to one sorted JSON array record (A5)") {
     val df = Seq((2, "b"), (1, "a")).toDF("k", "s")
     val out = TelcoPipelines.gatherJson(df).as[String].collect()
