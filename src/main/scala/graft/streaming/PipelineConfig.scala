@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -40,6 +41,11 @@ final case class PipelineConfig(
   require(metricsSlideMillis > 0 && metricsSlideMillis <= metricsWindowMillis,
     s"metricsSlideMillis: must be in (0, metricsWindowMillis = " +
       s"$metricsWindowMillis], got $metricsSlideMillis")
+  // parsed and checked as `withWatermark` does its delay threshold, which
+  // would otherwise fail on the first micro-batch without naming the key
+  require(scala.util.Try(IntervalUtils.fromIntervalString(watermark))
+      .toOption.exists(!IntervalUtils.isNegative(_)),
+    s"watermark: must be a non-negative Spark interval, got '$watermark'")
   require(kmeansDimensions.nonEmpty, "kmeansDimensions: must name at least one metric")
   require(kmeansK >= 1, s"kmeansK: must be >= 1, got $kmeansK")
   // MLlib's StreamingKMeans.setDecayFactor has the same rule: a negative

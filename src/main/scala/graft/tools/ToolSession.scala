@@ -30,6 +30,12 @@ import org.apache.spark.sql.SparkSession
   *     execution slots; 200 partitions is pure scheduling overhead at
   *     this scale. On a real cluster this is sized to the executor
   *     fleet instead.
+  *   - adaptive.enabled left at Spark's default (true): the catalog's
+  *     queries keep adaptive query execution. The telco topology turns it off only for its fan-out
+  *     query, on that query's own session
+  *     ([[graft.streaming.TelcoPipelines.start]]), where ~2,000-event
+  *     micro-batches paid ~7 extra jobs each for re-planning they do not
+  *     need.
   *   - buffer.pageSize 256 KB ([[PageSize]]): unset, Spark sizes its
   *     Tungsten pages from heap and cores, 16 MB on a 3 GB 4-core driver
   *     and up to 64 MB on bigger ones. Every hash-aggregate task, every

@@ -24,6 +24,15 @@ class PipelineSpec extends SparkSuite {
     CelltowerEvent(Celltower(206, 10, 1234, 40, LatLng(lat, lng)),
       bearer, Map("rtt" -> rtt, "byteLoss" -> loss), "celltower-topic", ts)
 
+  /** A one-fence file around the box [la0, la1] × [ln0, ln1], in the
+    * reference wire shape.
+    */
+  private def fenceJson(name: String, la0: Double, la1: Double,
+                        ln0: Double, ln1: Double): String =
+    s"""[{"name":"$name","path":"","polygon":[""" +
+      s"""{"lat":$la0,"lng":$ln0},{"lat":$la1,"lng":$ln0},""" +
+      s"""{"lat":$la1,"lng":$ln1},{"lat":$la0,"lng":$ln1}]}]"""
+
   test("keyed upsert store is last-write-wins across batches") {
     val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
     val store = new KeyedUpsertStore(spark, s"$dir/attach", "bearerId", "ts")
@@ -97,7 +106,7 @@ class PipelineSpec extends SparkSuite {
     //    a sequential replay of the same enriched batches into a fresh
     //    model (the W6 evolving-state guarantee, sustained);
     //  - S6's actual operating mode: the configured fence FILE is
-    //    re-read per batch (the reference hot-reloads every 5 s,
+    //    checked per batch (the reference hot-reloads every 5 s,
     //    Geofencer.scala:18-23), so overwriting it mid-stream must flip
     //    which points hit from the very next batch — asserted by exact
     //    (batch, bearer) hit-set equality across the swap.
@@ -113,9 +122,7 @@ class PipelineSpec extends SparkSuite {
     def writeFences(name: String, la0: Double, la1: Double,
                     ln0: Double, ln1: Double): Unit =
       java.nio.file.Files.writeString(java.nio.file.Paths.get(fencePath),
-        s"""[{"name":"$name","path":"","polygon":[""" +
-          s"""{"lat":$la0,"lng":$ln0},{"lat":$la1,"lng":$ln0},""" +
-          s"""{"lat":$la1,"lng":$ln1},{"lat":$la0,"lng":$ln1}]}]""")
+        fenceJson(name, la0, la1, ln0, ln1))
     writeFences("brussels_box", 50.0, 51.5, 4.0, 5.0)
     val swapAt = 25
 
@@ -445,6 +452,21 @@ class PipelineSpec extends SparkSuite {
     assert(streaming.PipelineConfig.fromJson(allJson) === all)
   }
 
+  test("PipelineConfig rejects a watermark that is not a non-negative " +
+      "interval at construction, naming the key") {
+    for (bad <- Seq("banana", "-1 minute", "")) {
+      val e = intercept[IllegalArgumentException](
+        streaming.PipelineConfig(watermark = bad))
+      assert(e.getMessage.contains("watermark"), e.getMessage)
+      val j = intercept[IllegalArgumentException](
+        streaming.PipelineConfig.fromJson(s"""{"watermark": "$bad"}"""))
+      assert(j.getMessage.contains("watermark"), j.getMessage)
+    }
+    assert(streaming.PipelineConfig(watermark = "0 seconds").watermark === "0 seconds")
+    assert(streaming.PipelineConfig.fromJson("""{"watermark": "90 seconds"}""")
+      .watermark === "90 seconds")
+  }
+
   test("config fixture drives the whole topology (windows, k, dims, fence file)") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-cfg-e2e")
@@ -509,6 +531,89 @@ class PipelineSpec extends SparkSuite {
       assert(!fanoutQ.isActive && attachQ.isActive)
       assert(spark.sharedState.cacheManager.isEmpty)
     } finally queries.foreach(_.stop())
+  }
+
+  test("the fence file reloads when its bytes change and is not scanned " +
+      "again while they stay the same") {
+    import org.apache.spark.graft.JobCounter
+    import org.apache.spark.scheduler.SparkListenerJobStart
+    import java.nio.file.{Files, StandardCopyOption}
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-fence-reload")
+    val fenceFile = dir.resolve("fences.json")
+    Files.writeString(fenceFile, fenceJson("brussels_box", 50.0, 51.5, 4.0, 5.0))
+    // a writer's atomic replace: write a temporary file, rename it over
+    def replaceFences(json: String): Unit = {
+      val tmp = dir.resolve("fences.json.tmp")
+      Files.writeString(tmp, json)
+      Files.move(tmp, fenceFile, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    }
+    val config = streaming.PipelineConfig(storePath = s"$dir/attach",
+      kmeansK = 2, batchMillis = 0L, geofenceFile = Some(fenceFile.toString))
+    val attachMem = MemoryStream[AttachEvent]
+    val ctMem = MemoryStream[CelltowerEvent]
+    val hits = new java.util.concurrent.ConcurrentHashMap[Long, Set[(String, String)]]()
+    val (queries, _) = TelcoPipelines.start(config, attachMem.toDF(), ctMem.toDF(),
+      (out, id) => hits.put(id, out.geofenceHits.as[(String, String)].collect().toSet))
+    val Seq(attachQ, fanoutQ) = queries
+    // one event in Brussels (b1), one at (40, 1) (b2)
+    def sendBatch(ts: Long): Unit = {
+      ctMem.addData(ct("b1", ts, 10.0, 0.1),
+        ct("b2", ts, 20.0, 0.2, lat = 40.0, lng = 1.0))
+      fanoutQ.processAllAvailable()
+    }
+    // a job that scans a text file: a file scan's RDD, with the text
+    // format named in its operator scope
+    def scansText(e: SparkListenerJobStart): Boolean =
+      e.stageInfos.exists(_.rddInfos.exists(r =>
+        r.scope.exists(_.name.contains("Scan text"))))
+    try {
+      attachMem.addData(attach("b1", 1, 1000L), attach("b2", 2, 1000L))
+      attachQ.processAllAvailable()
+      sendBatch(10000L)
+      assert(hits.get(0L) === Set("b1" -> "brussels_box"))
+      replaceFences(fenceJson("iberia_box", 39.0, 41.0, 0.0, 2.0))
+      sendBatch(11000L)
+      assert(hits.get(1L) === Set("b2" -> "iberia_box"))
+      val textScans = JobCounter.streamingBatch(spark.sparkContext, fanoutQ.id, 2L,
+        where = scansText)(sendBatch(12000L))
+      assert(hits.get(2L) === Set("b2" -> "iberia_box"))
+      assert(textScans === 0)
+    } finally queries.foreach(_.stop())
+  }
+
+  test("a fan-out micro-batch writing all four outputs runs at most 8 Spark " +
+      "jobs, with AQE off only on the query's own session") {
+    import org.apache.spark.graft.JobCounter
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-batch-jobs")
+    val fenceFile = dir.resolve("fences.json")
+    java.nio.file.Files.writeString(fenceFile,
+      fenceJson("brussels_box", 50.0, 51.5, 4.0, 5.0))
+    val config = streaming.PipelineConfig(storePath = s"$dir/attach",
+      kmeansK = 2, batchMillis = 0L, geofenceFile = Some(fenceFile.toString))
+    val attachMem = MemoryStream[AttachEvent]
+    val ctMem = MemoryStream[CelltowerEvent]
+    val (queries, _) = TelcoPipelines.start(config, attachMem.toDF(), ctMem.toDF(),
+      (out, _) => Seq(out.subscriberStats, out.celltowerStats, out.geofenceHits,
+        out.anomalies).foreach(_.write.format("noop").mode("overwrite").save()))
+    val Seq(attachQ, fanoutQ) = queries
+    def sendBatch(ts: Long): Unit = {
+      ctMem.addData((1 to 20).map(i =>
+        ct(s"b$i", ts + i * 100L, 10.0 + i, 0.1 * i)): _*)
+      fanoutQ.processAllAvailable()
+    }
+    try {
+      attachMem.addData((1 to 20).map(i => attach(s"b$i", i, 1000L)): _*)
+      attachQ.processAllAvailable()
+      sendBatch(10000L) // the first micro-batch also starts the query
+      val jobs = JobCounter.streamingBatch(spark.sparkContext, fanoutQ.id, 1L)(
+        sendBatch(20000L))
+      // with AQE on and the fence file scanned every batch, it ran 15
+      assert(jobs > 0 && jobs <= 8, s"$jobs jobs")
+    } finally queries.foreach(_.stop())
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
   }
 
   test("gatherJson collapses a frame to one sorted JSON array record (A5)") {
