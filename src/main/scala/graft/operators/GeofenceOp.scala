@@ -44,47 +44,25 @@ object GeofenceOp {
     * (`work/traffic-geofences.json`: one array of {name, path, polygon:
     * [{lat,lng}...]}). The reference hot-reloads this file every 5 s on
     * a driver timer into a driver-side variable (`Geofencer.scala:18-23`);
-    * the Structured Streaming analog is a [[FenceReloader]] consulted
-    * inside `foreachBatch`. This reader is one load with no reuse.
-    */
-  def fencesFromJson(spark: SparkSession, path: String): DataFrame =
-    new FenceReloader().load(spark, path)
-
-  /** S6 hot reload across micro-batches. Each [[load]] reads the file's
-    * bytes on the driver (the 5-fence file is ~3 KB) and re-parses only
-    * when they differ from the last load; otherwise it reuses the parsed
-    * fences as a local frame on the caller's session, so an unchanged
-    * file costs no file listing, no text scan and no parse. The reload
-    * is keyed on the bytes, not on the modification time, so a rewrite
-    * of equal length within one timestamp tick is still seen.
+    * the Structured Streaming analog is this load inside `foreachBatch`.
+    * It reads the file's bytes on the driver (the 5-fence file is ~3 KB)
+    * and parses them into a local frame (a `LocalRelation`), so each
+    * micro-batch sees the file as it is then and a load costs no file
+    * listing, no text scan and no parse job.
     *
     * A half-written file must not read as "no fences" (every point would
     * silently miss every fence for that batch): an empty file, or a
     * non-blank line that is not a JSON array of fences, each a `{name,
     * polygon: [{lat, lng}...]}` object, fails the load, naming `path`.
-    * Blank lines are skipped; a file holding `[]` is no fences. A failed
-    * load changes nothing the reloader holds.
+    * Blank lines are skipped; a file holding `[]` is no fences.
     * Inside [[graft.streaming.TelcoPipelines.start]] the failure stops
     * the fan-out query (nothing restarts it); restarted against its
     * checkpoint, the query replays the failed batch. So a writer must
     * still replace the file atomically: write a temporary file, then
     * rename it over `path`.
     */
-  final class FenceReloader {
-    private var last: Option[(String, Array[Byte], Seq[Fence])] = None
-
-    def load(spark: SparkSession, path: String): DataFrame = synchronized {
-      val bytes = readAll(spark, path)
-      val fs = last match {
-        case Some((p, b, fs)) if p == path && java.util.Arrays.equals(b, bytes) => fs
-        case _ =>
-          val fs = parse(path, bytes)
-          last = Some((path, bytes, fs))
-          fs
-      }
-      frame(spark, fs)
-    }
-  }
+  def fencesFromJson(spark: SparkSession, path: String): DataFrame =
+    frame(spark, parse(path, readAll(spark, path)))
 
   private def readAll(spark: SparkSession, path: String): Array[Byte] = {
     val file = new org.apache.hadoop.fs.Path(path)

@@ -57,21 +57,17 @@ object TelcoPipelines {
     * re-run the decode + store join. Call [[Outputs.release]] after the
     * sinks run; [[start]] does.
     *
-    * S6: a configured fence file is checked per batch (hot reload)
-    * through `fenceReloader`, which re-parses it only when its bytes
-    * change. [[start]] passes one reloader for the topology's lifetime;
-    * the default is a fresh one, which loads the file with no reuse.
+    * S6: a configured fence file is read again every batch (hot
+    * reload), on the driver, through [[GeofenceOp.fencesFromJson]].
     */
   def processBatch(celltower: DataFrame, attachStore: Option[DataFrame],
                    km: IncrementalKMeans,
                    config: PipelineConfig = PipelineConfig(),
-                   train: Boolean = true,
-                   fenceReloader: GeofenceOp.FenceReloader =
-                     new GeofenceOp.FenceReloader): Outputs = {
+                   train: Boolean = true): Outputs = {
     val spark = celltower.sparkSession
     // loaded before `enriched` is persisted, so a bad file leaks no cache
     val fences = config.geofenceFile
-      .fold(GeofenceOp.fencesDf(spark))(fenceReloader.load(spark, _))
+      .fold(GeofenceOp.fencesDf(spark))(GeofenceOp.fencesFromJson(spark, _))
     val enriched = (attachStore match {
       case Some(store) =>
         StreamOps.enrich(celltower,
@@ -124,11 +120,18 @@ object TelcoPipelines {
     * (AQE). Its ~2,000-event batches gain nothing from re-planning at
     * run time, and AQE submits every shuffle stage and broadcast of a
     * plan as a job of its own and re-optimizes between them. With AQE
-    * on and the fence file scanned every batch, a fan-out micro-batch
-    * ran 15 Spark jobs; now it runs 8 (PipelineSpec bounds it). Paired
-    * perfbench runs on a 4-core VM, both changes together: p50 latency
-    * 1.86 -> 1.50 s on `telco_read` (10 of 10 pairs) and 1.81 -> 1.43 s
-    * on `telco_churn` (6 of 6). Spark turns AQE off by itself only for
+    * on and the fence file scanned as text every batch, a fan-out
+    * micro-batch ran 15 Spark jobs; now, with the fence file read on the
+    * driver, it runs 8 (PipelineSpec bounds it). Paired perfbench runs
+    * on a 4-core VM, both changes together: p50 latency 1.86 -> 1.50 s
+    * on `telco_read` (10 of 10 pairs) and 1.81 -> 1.43 s on
+    * `telco_churn` (6 of 6). The claim holds while the store snapshot
+    * stays under `spark.sql.autoBroadcastJoinThreshold`, so the planner
+    * broadcasts it from its on-disk size (measured with a 10k-row
+    * store, far under the 10 MB default). Above it every micro-batch
+    * shuffles and sorts the whole store, and without AQE nothing turns
+    * that join into a broadcast at run time from the tiny batch side.
+    * Spark turns AQE off by itself only for
     * stateful streaming plans. The setting lives on `batch.sparkSession`,
     * the query's own clone of the caller's session, so the caller's
     * session, the attach query and any other query on it keep AQE. It is
@@ -142,7 +145,6 @@ object TelcoPipelines {
     val store = new KeyedUpsertStore(attachStream.sparkSession,
       config.storePath, "bearerId", "ts")
     val km = config.newKMeans()
-    val fenceReloader = new GeofenceOp.FenceReloader
     // W4/W6 full-topology restart: when checkpointing is on, the
     // evolving model state rides the same checkpoint dir as the query
     // offsets — restored at boot (fresh-boot no-op) and snapshotted
@@ -166,7 +168,7 @@ object TelcoPipelines {
         // snapshot→offset-commit gap re-emits its outputs
         // (at-least-once) but must not re-enter the model state
         val out = processBatch(batch, store.current, km, config,
-          train = id > km.lastAppliedBatch, fenceReloader)
+          train = id > km.lastAppliedBatch)
         try sink(out, id) finally out.release()
         // post-sink state snapshot (model checkpoint). Runs
         // BEFORE the batch's offset commit, so a crash in the gap

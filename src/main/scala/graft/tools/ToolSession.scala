@@ -30,9 +30,9 @@ import org.apache.spark.sql.SparkSession
   *     execution slots; 200 partitions is pure scheduling overhead at
   *     this scale. On a real cluster this is sized to the executor
   *     fleet instead.
-  *   - adaptive.enabled left at Spark's default (true): the catalog's
-  *     queries keep adaptive query execution. The telco topology turns it off only for its fan-out
-  *     query, on that query's own session
+  *   - adaptive.enabled = true, set explicitly in [[build]]: the
+  *     catalog's queries keep adaptive query execution. The telco
+  *     topology turns it off only on its fan-out query's own session
   *     ([[graft.streaming.TelcoPipelines.start]]), where ~2,000-event
   *     micro-batches paid ~7 extra jobs each for re-planning they do not
   *     need.

@@ -533,8 +533,8 @@ class PipelineSpec extends SparkSuite {
     } finally queries.foreach(_.stop())
   }
 
-  test("the fence file reloads when its bytes change and is not scanned " +
-      "again while they stay the same") {
+  test("the fence file hot-reloads on an atomic replace, and a micro-batch " +
+      "over it runs no text-scan job") {
     import org.apache.spark.graft.JobCounter
     import org.apache.spark.scheduler.SparkListenerJobStart
     import java.nio.file.{Files, StandardCopyOption}
