@@ -56,16 +56,14 @@ object TelcoPipelines {
     * `TrafficStreamProcessor.scala:58`) — without it each sink would
     * re-run the decode + store join. Call [[Outputs.release]] after the
     * sinks run; [[start]] does.
-    *
-    * S6: a configured fence file is read again every batch (hot
-    * reload), on the driver, through [[GeofenceOp.fencesFromJson]].
     */
   def processBatch(celltower: DataFrame, attachStore: Option[DataFrame],
                    km: IncrementalKMeans,
                    config: PipelineConfig = PipelineConfig(),
                    train: Boolean = true): Outputs = {
     val spark = celltower.sparkSession
-    // loaded before `enriched` is persisted, so a bad file leaks no cache
+    // S6: a configured fence file is re-read per batch (hot reload); read
+    // before `enriched` is persisted, so a bad file leaks no cache
     val fences = config.geofenceFile
       .fold(GeofenceOp.fencesDf(spark))(GeofenceOp.fencesFromJson(spark, _))
     val enriched = (attachStore match {
@@ -123,8 +121,8 @@ object TelcoPipelines {
     * on and the fence file scanned as text every batch, a fan-out
     * micro-batch ran 15 Spark jobs; now, with the fence file read on the
     * driver, it runs 8 (PipelineSpec bounds it). Paired perfbench runs
-    * on a 4-core VM, both changes together: p50 latency 1.86 -> 1.50 s
-    * on `telco_read` (10 of 10 pairs) and 1.81 -> 1.43 s on
+    * on a 4-core VM, both changes together: p50 latency 1.68 -> 1.33 s
+    * on `telco_read` (10 of 10 pairs) and 2.22 -> 1.65 s on
     * `telco_churn` (6 of 6). The claim holds while the store snapshot
     * stays under `spark.sql.autoBroadcastJoinThreshold`, so the planner
     * broadcasts it from its on-disk size (measured with a 10k-row
